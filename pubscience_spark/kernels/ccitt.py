@@ -2,7 +2,7 @@
 
 Scanned-PDF image XObjects and bilevel TIFFs overwhelmingly carry
 CCITTFaxDecode (PDF) / compression 3-4 (TIFF) data; until round 6 these
-surfaced as named error records (``kernels/pdfobj.py`` harvest_images,
+surfaced as named error records (the since-removed PDF image harvest,
 ``kernels/tiff.py``). This module implements the codec from the public
 ITU-T specs:
 

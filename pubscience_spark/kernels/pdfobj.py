@@ -1238,262 +1238,6 @@ def harvest_links(objs: dict) -> list[str]:
     return sorted(found)
 
 
-_N_COMPONENTS = {"DeviceRGB": 3, "CalRGB": 3, "DeviceGray": 1,
-                 "CalGray": 1}
-
-
-def _unpack_values(data: bytes, w: int, h: int, ncomp: int,
-                   bpc: int) -> "np.ndarray":
-    """Raw image samples → (H, W, ncomp) ints. Rows are padded to whole
-    bytes (spec 8.9.5.2); bpc ∈ {1, 2, 4, 8}, MSB-first sub-byte
-    packing."""
-    import numpy as np
-    row_bits = w * ncomp * bpc
-    row_bytes = (row_bits + 7) // 8
-    if len(data) < row_bytes * h:
-        raise ValueError("image-data-short")
-    rows = np.frombuffer(data[:row_bytes * h],
-                         dtype=np.uint8).reshape(h, row_bytes)
-    if bpc == 8:
-        return rows[:, :w * ncomp].reshape(h, w, ncomp)
-    bits = np.unpackbits(rows, axis=1)[:, :row_bits]
-    weights = (1 << np.arange(bpc - 1, -1, -1)).astype(np.uint16)
-    vals = bits.reshape(h, w * ncomp, bpc) @ weights
-    return vals.reshape(h, w, ncomp)
-
-
-def _raw_samples(data: bytes, cs, bpc: int, w: int, h: int,
-                 decode, objs) -> "np.ndarray":
-    """Raw-sample (non-DCT/CCITT) image → (H, W, C) uint8 (round 6:
-    1/2/4-bit depths, /Indexed palettes, /Decode arrays — the remaining
-    common raw-image shapes):
-
-    - gray/RGB at bpc 1-8: values scale to 8-bit sample space; a
-      /Decode array remaps per component (e.g. ``[1 0]`` inversion);
-    - ``[/Indexed base hival lookup]``: stored samples are palette
-      indices (1 component), looked up in the (decoded) lookup table
-      over an 8-bpc base colorspace; out-of-range indices clamp per
-      spec; a nontrivial /Decode on indexed images is ignored (the
-      default identity covers real-world use)."""
-    import numpy as np
-    maxval = (1 << bpc) - 1
-    if bpc not in (1, 2, 4, 8):
-        raise ValueError(f"unsupported-image:{cs}/{bpc}bpc")
-    if isinstance(cs, list) and cs and \
-            str(_resolve(cs[0], objs)) == "Indexed" and len(cs) == 4:
-        base = _resolve(cs[1], objs)
-        hival = int(_resolve(cs[2], objs))
-        lut = _resolve(cs[3], objs)
-        if isinstance(lut, Stream):
-            lut = decode_stream(lut, objs)
-        nbase = _N_COMPONENTS.get(str(base))
-        if nbase is None or not isinstance(lut, bytes):
-            raise ValueError(f"unsupported-indexed-base:{base}")
-        if len(lut) < (hival + 1) * nbase:
-            raise ValueError("indexed-lookup-short")
-        palette = np.frombuffer(lut[:(hival + 1) * nbase],
-                                dtype=np.uint8).reshape(hival + 1, nbase)
-        idx = _unpack_values(data, w, h, 1, bpc)[:, :, 0]
-        return palette[np.minimum(idx, hival)]
-    ncomp = _N_COMPONENTS.get(str(cs))
-    if ncomp is None:
-        raise ValueError(f"unsupported-image:{cs}/{bpc}bpc")
-    vals = _unpack_values(data, w, h, ncomp, bpc).astype(np.float64)
-    lo = np.zeros(ncomp)
-    hi = np.ones(ncomp)
-    if isinstance(decode, list) and len(decode) == 2 * ncomp:
-        arr = [float(_resolve(x, objs)) for x in decode]
-        lo = np.array(arr[0::2])
-        hi = np.array(arr[1::2])
-    out = (lo + vals / maxval * (hi - lo)) * 255.0
-    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-
-
-def _ccitt_samples(payload: bytes, parm: dict, w: int, h: int,
-                   objs, decode=None) -> "np.ndarray":
-    """CCITTFaxDecode terminal stage → (H, W, 1) uint8 SAMPLE values
-    (like the raw-decode path: 0/255 per the PDF bit semantics):
-    default ``BlackIs1 false`` means a 0 bit is black (spec table 11),
-    so black → 0; ``BlackIs1 true`` inverts. A 1-component /Decode
-    array (e.g. ``[1 0]``, a common producer bit-sense flip) remaps
-    the same way the raw-sample path does."""
-    import numpy as np
-
-    from .ccitt import decode_g3_1d, decode_g3_2d, decode_g4
-
-    def p(key, default):
-        v = _resolve(parm.get(key), objs) if isinstance(parm, dict) \
-            else None
-        return default if v is None else v
-
-    k = int(p("K", 0))
-    columns = int(p("Columns", 1728))
-    rows = int(p("Rows", 0)) or h
-    black_is_1 = bool(p("BlackIs1", False))
-    align = bool(p("EncodedByteAlign", False))
-    if k < 0:
-        black = decode_g4(payload, columns, rows, byte_align=align)
-    elif k == 0:
-        black = decode_g3_1d(payload, columns, rows, byte_align=align)
-    else:
-        black = decode_g3_2d(payload, columns, rows, byte_align=align)
-    if columns != w or black.shape[0] != h:
-        black = black[:h, :w]
-        if black.shape != (h, w):
-            raise ValueError("ccitt-dims-mismatch")
-    bit = black if black_is_1 else (1 - black)
-    return _bilevel_display(bit, h, w, decode, objs)
-
-
-def _bilevel_display(bit, h: int, w: int, decode, objs) -> "np.ndarray":
-    """Shared bilevel → display tail: /Decode-array remap else
-    bit × 255 (``bit`` 1 = display-white after the codec's sense flip).
-    """
-    import numpy as np
-    if isinstance(decode, list) and len(decode) == 2:
-        lo, hi = (float(_resolve(x, objs)) for x in decode)
-        val = (lo + bit.astype(np.float64) * (hi - lo)) * 255.0
-        return np.clip(np.rint(val), 0, 255).astype(np.uint8) \
-            .reshape(h, w, 1)
-    return (bit.astype(np.uint8) * np.uint8(255)).reshape(h, w, 1)
-
-
-def _jbig2_samples(payload: bytes, parm, w: int, h: int, objs,
-                   decode) -> "np.ndarray":
-    """JBIG2Decode terminal stage → (H, W, 1) uint8. The filter's
-    ``DecodeParms /JBIG2Globals`` stream (shared symbol/page segments)
-    is prepended. T.88 bitmaps carry 1 = black; the PDF imaging-model
-    sample sense is 0 = black for 1-bpc gray, so the bit is flipped
-    before the /Decode remap — the same inversion every PDF consumer
-    applies (and the CCITT path's default BlackIs1=false sense)."""
-    from .jbig2 import decode_embedded
-
-    glob = b""
-    if isinstance(parm, dict):
-        g = _resolve(parm.get("JBIG2Globals"), objs)
-        if isinstance(g, Stream):
-            glob = decode_stream(g, objs)
-    page = decode_embedded(payload, glob)
-    if page.shape != (h, w):
-        page = page[:h, :w]
-        if page.shape != (h, w):
-            raise ValueError("jbig2-dims-mismatch")
-    return _bilevel_display(1 - page, h, w, decode, objs)
-
-
-def _jpx_samples(payload: bytes, w: int, h: int) -> "np.ndarray":
-    """JPXDecode terminal stage → (H, W, C) uint8. Color/depth come
-    from the JPX codestream itself (PDF 32000-1 7.4.9: the embedded
-    data supersedes the image dictionary's ColorSpace/BPC); depth
-    mapping is per-component via :func:`~.jpeg2000.to_display_uint8`
-    (>8-bit keeps the top byte, <8-bit scales to full range)."""
-    from .jpeg2000 import decode_jpx, to_display_uint8
-
-    arr = to_display_uint8(decode_jpx(payload))
-    if arr.shape[:2] != (h, w):
-        arr = arr[:h, :w]
-        if arr.shape[:2] != (h, w):
-            raise ValueError("jpx-dims-mismatch")
-    return arr
-
-
-def harvest_images(objs: "ObjMap | dict") -> list[dict]:
-    """Embedded image XObjects (the reference's fitz path reads these
-    transparently — parse_pdfs.py:221-229): one record per /Subtype
-    /Image stream, document order.
-
-    - ``DCTDecode`` images yield the embedded JPEG file bytes in
-      ``data`` (any preceding filters + document decryption applied) —
-      decode with :mod:`kernels.jpeg` / ``media.decode_image``;
-    - ``CCITTFaxDecode`` images (the dominant scanned-document codec)
-      decode through :mod:`kernels.ccitt` (round 6): G4 ``K < 0``,
-      1-D G3 ``K = 0`` and mixed 2-D G3 ``K > 0``, honoring Columns/Rows/BlackIs1/
-      EncodedByteAlign — ``samples`` (H, W, 1) uint8 sample space;
-    - Flate/LZW raw-sample images decode directly: 1/2/4/8-bpc
-      gray/RGB with /Decode-array remapping, and ``/Indexed`` palette
-      images (r6) — ``samples`` (H, W, C) uint8;
-    - ``JBIG2Decode`` images decode through :mod:`kernels.jbig2`
-      (round 7): generic-region tier incl. MMR, TPGDON, all four
-      templates, honoring ``/JBIG2Globals`` — symbol/text-region
-      streams land in ``error`` with the segment type named;
-    - ``JPXDecode`` images decode through :mod:`kernels.jpeg2000`
-      (round 7): JP2 or raw codestream, single tile, 5/3 and 9/7
-      wavelets, RCT/ICT, all five progression orders — unsupported
-      JPX features (multi-tile, user precincts, bypass & co) land in
-      ``error`` with the feature named;
-    - anything else (Separation/ICC spaces) sets
-      ``error`` — the error-column contract, never a raise."""
-    import numpy as np
-    out: list[dict] = []
-    for num in sorted(k for k in objs if isinstance(k, int)):
-        obj = objs[num]
-        if not isinstance(obj, Stream):
-            continue
-        d = obj.dict
-        if str(_resolve(d.get("Subtype"), objs)) != "Image":
-            continue
-        rec = {"num": num, "width": 0, "height": 0, "filter": None,
-               "data": None, "samples": None, "error": None}
-        # per-image contract: ANY malformation (garbage /Width, corrupt
-        # zlib/LZW data, bad filter chain) lands in the error field —
-        # one broken image must not raise past the healthy ones
-        try:
-            w = int(_resolve(d.get("Width"), objs) or 0)
-            h = int(_resolve(d.get("Height"), objs) or 0)
-            rec["width"], rec["height"] = w, h
-            filters = _resolve(d.get("Filter"), objs)
-            if filters is None:
-                filters = []
-            if not isinstance(filters, list):
-                filters = [filters]
-            filters = [str(_resolve(f, objs)) for f in filters]
-            rec["filter"] = filters[-1] if filters else None
-            if filters and filters[-1] in ("DCTDecode",
-                                           "CCITTFaxDecode",
-                                           "JBIG2Decode",
-                                           "JPXDecode"):
-                # strip the terminal stage; decode_stream applies
-                # decryption + the remaining cascade
-                pre = Stream(dict(d), obj.raw, obj.num, obj.gen)
-                pre.dict["Filter"] = filters[:-1]
-                parms = _resolve(d.get("DecodeParms")
-                                 or d.get("DP"), objs)
-                last_parm = {}
-                if isinstance(parms, list):
-                    pre.dict["DecodeParms"] = parms[:-1]
-                    if parms:
-                        last_parm = _resolve(parms[-1], objs) or {}
-                elif isinstance(parms, dict):
-                    last_parm = parms
-                pre.dict.pop("DP", None)
-                payload = decode_stream(pre, objs)
-                if filters[-1] == "DCTDecode":
-                    # JPEG file bytes — decode with kernels.jpeg
-                    rec["data"] = payload
-                elif filters[-1] == "JBIG2Decode":
-                    rec["samples"] = _jbig2_samples(
-                        payload, last_parm, w, h, objs,
-                        _resolve(d.get("Decode"), objs))
-                elif filters[-1] == "JPXDecode":
-                    rec["samples"] = _jpx_samples(payload, w, h)
-                else:
-                    rec["samples"] = _ccitt_samples(
-                        payload, last_parm, w, h, objs,
-                        _resolve(d.get("Decode"), objs))
-            else:
-                data = decode_stream(obj, objs)
-                bpc = int(_resolve(d.get("BitsPerComponent"), objs) or 8)
-                cs = _resolve(d.get("ColorSpace"), objs)
-                rec["samples"] = _raw_samples(
-                    data, cs, bpc, w, h,
-                    _resolve(d.get("Decode"), objs), objs)
-        except Exception as exc:                   # zlib.error, KeyError
-            rec["error"] = \
-                f"{type(exc).__name__}: {exc}"[:200]
-        out.append(rec)
-    return out
-
-
 def _text_string(val: bytes) -> str:
     """PDF text-string decode: UTF-16BE with BOM (the normal modern-
     producer encoding), UTF-8 with BOM (PDF 2.0), else PDFDocEncoding

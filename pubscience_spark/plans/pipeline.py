@@ -73,7 +73,6 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
                    *, n_buckets: int | None = None, resume: bool = True,
                    lang_keep: str | None = None,
                    use_detector_gate: bool = False,
-                   dedup_strategy: str = "slim-join",
                    boilerplate_by_domain: dict[str, str] | None = None
                    ) -> dict:
     """Run the pipeline; returns run metrics. Idempotent under re-run.
@@ -135,34 +134,19 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
             title_col="title").drop("__host")
 
     # X1/X2 duplicate marking (keep-first by url — deterministic total
-    # order). Two strategies, identical output on a fresh run ("windows"
-    # does NOT consult the cross-run keeper index — use the default
-    # "slim-join" whenever resume matters):
-    # - "slim-join": windows over a slim (url, keys) projection + one
-    #   shuffle-hash join back — wide rows shuffle once; requires a
-    #   disk-backed persist because the extracted DF feeds both join sides
-    #   (otherwise the expensive mapInPandas extraction runs twice);
-    # - "windows": row_number windows directly over the wide rows — one
-    #   extraction pass, but each dedup key is a full-data shuffle+sort.
-    cached = None
-    new_index = None
+    # order): windows over a slim (url, keys) projection + one
+    # shuffle-hash join back — wide rows shuffle once; requires a
+    # disk-backed persist because the extracted DF feeds both join sides
+    # (otherwise the expensive mapInPandas extraction runs twice)
+    from pyspark.storagelevel import StorageLevel
+    cached = extracted.persist(StorageLevel.MEMORY_AND_DISK)
     index_path = os.path.join(out_dir, "dedup_index")
-    if dedup_strategy == "slim-join":
-        from pyspark.storagelevel import StorageLevel
-        cached = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-        # cross-run correctness: keepers committed by earlier runs win, so
-        # a resumed bucket still marks duplicates of rows it cannot see
-        prior_index = dedup_ops.load_keeper_index(spark, index_path) \
-            if resume else None
-        extracted, new_index = dedup_ops.mark_duplicates_incremental(
-            cached, ["sha256", "dedup_key"], "url", prior_index)
-    else:
-        extracted = dedup_ops.mark_duplicates(extracted, "dedup_key", "url") \
-            .withColumnRenamed("is_duplicate", "is_prefix_duplicate")
-        extracted = dedup_ops.mark_duplicates(extracted, "sha256", "url") \
-            .withColumn("is_duplicate",
-                        F.col("is_duplicate") | F.col("is_prefix_duplicate")) \
-            .drop("is_prefix_duplicate")
+    # cross-run correctness: keepers committed by earlier runs win, so
+    # a resumed bucket still marks duplicates of rows it cannot see
+    prior_index = dedup_ops.load_keeper_index(spark, index_path) \
+        if resume else None
+    extracted, new_index = dedup_ops.mark_duplicates_incremental(
+        cached, ["sha256", "dedup_key"], "url", prior_index)
 
     # run-report counters (A4/R4) ride the write pass via observe() —
     # zero extra jobs (scripts/clean.py:863-869 analog)
@@ -186,10 +170,8 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
         .parquet(extracted_path)
     wall = time.time() - t0
     observed = dict(obs.get)
-    if new_index is not None:
-        new_index.write.mode("append").parquet(index_path)
-    if cached is not None:
-        cached.unpersist()
+    new_index.write.mode("append").parquet(index_path)
+    cached.unpersist()
 
     # empty run (everything committed already, or empty input): dynamic
     # overwrite writes no files, so there may be nothing to read. Probe

@@ -281,13 +281,15 @@ def run_incremental_curated(spark: SparkSession, input_dir: str,
 
 
 def _lineage_batches(spark: SparkSession, lineage_path: str) -> dict:
-    """{batch_id: row_count} from the lineage log ({} if none yet)."""
-    try:
-        rows = (spark.read.parquet(lineage_path)
-                .groupBy("batch_id").agg(F.sum("row_count").alias("n"))
-                .collect())
-    except Exception:
+    """{batch_id: row_count} from the lineage log ({} if none yet). A
+    genuine read failure propagates: reading it as "nothing committed"
+    would make ``run_incremental_curated`` silently curate nothing."""
+    from ..operators import dedup as dedup_ops
+    raw = dedup_ops._read_index_or_none(spark, lineage_path)
+    if raw is None:
         return {}
+    rows = (raw.groupBy("batch_id").agg(F.sum("row_count").alias("n"))
+            .collect())
     return {r["batch_id"]: r["n"] for r in rows}
 
 

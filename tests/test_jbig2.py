@@ -1,12 +1,10 @@
 """JBIG2 kernel (kernels/jbig2): MQ coder round-trips + Qe-table
 structural invariants, generic regions across templates/TPGDON/AT/MMR,
-embedded segment layer with composition, named-error tiers, and the
-PDF JBIG2Decode harvest path incl. /JBIG2Globals."""
+embedded segment layer with composition, and named-error tiers."""
 
 from __future__ import annotations
 
 import random
-import zlib
 
 import numpy as np
 import pytest
@@ -196,83 +194,6 @@ def test_named_errors():
         decode_generic_region(b"", 0, 5)
 
 
-def test_pdf_harvest_jbig2():
-    """JBIG2Decode XObjects through harvest_images: plain, Flate
-    cascade, /JBIG2Globals stream, /Decode [1 0] flip, and a
-    symbol-dictionary stream landing in the error column."""
-    from pubscience_spark.kernels import pdfobj
-    from tests.test_pdfobj import N, R, _classic_obj
-
-    black = _img(10, 20, 6)
-    blob = encode_embedded(black)
-    segs = parse_segments(blob)
-    cut = blob.index(segs[1]["data"]) - 11
-    glob, regiononly = blob[:cut], blob[cut:]
-    huff = (1).to_bytes(2, "big") + b"\x00" * 10
-    symdict = (b"\x00\x00\x00\x07" + bytes([0]) + b"\x00" + bytes([1])
-               + len(huff).to_bytes(4, "big")) + huff + blob
-
-    out = bytearray(b"%PDF-1.5\n")
-    base = {"Type": N("XObject"), "Subtype": N("Image"),
-            "Width": 20, "Height": 10, "ColorSpace": N("DeviceGray"),
-            "BitsPerComponent": 1}
-    out += _classic_obj(1, {**base, "Filter": N("JBIG2Decode"),
-                            "Length": len(blob)}, blob)
-    z = zlib.compress(blob)
-    out += _classic_obj(2, {**base,
-                            "Filter": [N("FlateDecode"),
-                                       N("JBIG2Decode")],
-                            "DecodeParms": [None, {}],
-                            "Length": len(z)}, z)
-    out += _classic_obj(3, {**base, "Filter": N("JBIG2Decode"),
-                            "DecodeParms":
-                                {"JBIG2Globals": R(10, 0)},
-                            "Length": len(regiononly)}, regiononly)
-    out += _classic_obj(4, {**base, "Filter": N("JBIG2Decode"),
-                            "Decode": [1, 0],
-                            "Length": len(blob)}, blob)
-    out += _classic_obj(5, {**base, "Filter": N("JBIG2Decode"),
-                            "Length": len(symdict)}, symdict)
-    out += _classic_obj(10, {"Length": len(glob)}, glob)
-    out += b"%%EOF\n"
-    images = pdfobj.harvest_images(pdfobj.parse_document(bytes(out)))
-    images = [im for im in images if im["filter"] is not None]
-    assert [im["error"] is None for im in images] \
-        == [True, True, True, True, False]
-    want = ((1 - black) * 255).reshape(10, 20, 1)
-    for im in images[:3]:
-        assert np.array_equal(im["samples"], want)
-    assert np.array_equal(images[3]["samples"], 255 - want)
-    assert "symdict-huffman" in images[4]["error"]
-
-
-def test_pdf_image_features_jbig2_spark_route(spark):
-    """A JBIG2 scanned-page PDF driven through the Arrow-batched
-    pdf_image_features operator end-to-end."""
-    import numpy as np
-    from pubscience_spark.operators.multimodal import pdf_image_features
-    from tests.test_pdfobj import N, _classic_obj
-
-    black = _img(10, 20, 6)
-    blob = encode_embedded(black)
-    out = bytearray(b"%PDF-1.5\n")
-    out += _classic_obj(1, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 20, "Height": 10,
-                            "ColorSpace": N("DeviceGray"),
-                            "BitsPerComponent": 1,
-                            "Filter": N("JBIG2Decode"),
-                            "Length": len(blob)}, blob)
-    out += b"%%EOF\n"
-    df = spark.createDataFrame([("pdf://jb", bytearray(bytes(out)))],
-                               "url string, content binary")
-    rows = pdf_image_features(df).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["width"], r["height"]) == (20, 10)
-    assert r["filter"] == "JBIG2Decode" and r["error"] is None
-    assert len(r["feature"]) > 0
-
-
 # ------------------------- symbol-dictionary + text-region tier (r7b) --
 
 def _glyph(seed, h, w):
@@ -369,34 +290,6 @@ def test_symbol_text_named_error_tiers():
         + blob[blob.index(d["data"]) + len(d["data"]):]
     with pytest.raises(J.Jbig2Error, match="no-symbols"):
         decode_embedded(no_dict)
-
-
-def test_pdf_harvest_symbol_text_pdf(spark):
-    """A symbol/text-coded JBIG2 (the layout real scanned PDFs emit)
-    through harvest_images AND the Spark pdf_image_features route."""
-    from pubscience_spark.kernels import pdfobj
-    from pubscience_spark.kernels.jbig2 import encode_embedded_text
-    from pubscience_spark.operators.multimodal import pdf_image_features
-    from tests.test_pdfobj import N, _classic_obj
-
-    syms, inst, want = _text_fixture()
-    blob = encode_embedded_text(syms, inst, 60, 32)
-    out = bytearray(b"%PDF-1.5\n")
-    out += _classic_obj(1, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 60, "Height": 32,
-                            "ColorSpace": N("DeviceGray"),
-                            "BitsPerComponent": 1,
-                            "Filter": N("JBIG2Decode"),
-                            "Length": len(blob)}, blob)
-    out += b"%%EOF\n"
-    images = pdfobj.harvest_images(pdfobj.parse_document(bytes(out)))
-    assert images[0]["error"] is None
-    assert np.array_equal(images[0]["samples"],
-                          ((1 - want) * 255).reshape(32, 60, 1))
-    df = spark.createDataFrame([("pdf://st", bytearray(bytes(out)))],
-                               "url string, content binary")
-    r = pdf_image_features(df).collect()[0]
-    assert r["error"] is None and (r["width"], r["height"]) == (60, 32)
 
 
 def test_symdict_ctx_used_named_error():
@@ -593,14 +486,11 @@ def test_symbol_dict_refagg_roundtrip():
         _decode_symbol_dict({"data": pay, "refs": []}, {})
 
 
-def test_text_region_refine_instances(spark):
+def test_text_region_refine_instances():
     """REFINE=1 text regions: per-instance IARI bit, refined bitmaps
-    with size deltas placed alongside plain instances — through
-    decode_embedded AND the PDF/Spark route."""
-    from pubscience_spark.kernels import pdfobj
+    with size deltas placed alongside plain instances, through
+    decode_embedded."""
     from pubscience_spark.kernels.jbig2 import encode_embedded_text
-    from pubscience_spark.operators.multimodal import pdf_image_features
-    from tests.test_pdfobj import N, _classic_obj
 
     rng = np.random.RandomState(9)
     syms = [_glyph(11, 8, 5), _glyph(12, 8, 6)]
@@ -618,35 +508,14 @@ def test_text_region_refine_instances(spark):
     got = decode_embedded(blob)
     assert np.array_equal(got, want)
 
-    out = bytearray(b"%PDF-1.5\n")
-    out += _classic_obj(1, {"Type": N("XObject"),
-                            "Subtype": N("Image"),
-                            "Width": 40, "Height": 16,
-                            "ColorSpace": N("DeviceGray"),
-                            "BitsPerComponent": 1,
-                            "Filter": N("JBIG2Decode"),
-                            "Length": len(blob)}, blob)
-    out += b"%%EOF\n"
-    images = pdfobj.harvest_images(pdfobj.parse_document(bytes(out)))
-    assert images[0]["error"] is None
-    assert np.array_equal(images[0]["samples"],
-                          ((1 - want) * 255).reshape(16, 40, 1))
-    df = spark.createDataFrame([("pdf://rf", bytearray(bytes(out)))],
-                               "url string, content binary")
-    r = pdf_image_features(df).collect()[0]
-    assert r["error"] is None and (r["width"], r["height"]) == (40, 16)
 
-
-def test_halftone_region_roundtrip(spark):
+def test_halftone_region_roundtrip():
     """Pattern dictionary + halftone region (r7c): gray-coded bitplane
-    image selecting patterns onto the page — embedded round trip, a
-    named-error tier check, and the PDF/Spark route."""
-    from pubscience_spark.kernels import pdfobj
+    image selecting patterns onto the page — embedded round trip and a
+    named-error tier check."""
     from pubscience_spark.kernels.jbig2 import (
         _PAGE_INFO, encode_halftone_region_payload,
         encode_pattern_dict_payload)
-    from pubscience_spark.operators.multimodal import pdf_image_features
-    from tests.test_pdfobj import N, _classic_obj
 
     rng = np.random.RandomState(4)
     # 6 density patterns, 4x4 each
@@ -692,23 +561,6 @@ def test_halftone_region_roundtrip(spark):
                 + seg(2, 22, [1], bytes(bad)))
     with pytest.raises(J.Jbig2Error, match="enableskip"):
         decode_embedded(blob_bad)
-
-    out = bytearray(b"%PDF-1.5\n")
-    out += _classic_obj(1, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": w, "Height": h,
-                            "ColorSpace": N("DeviceGray"),
-                            "BitsPerComponent": 1,
-                            "Filter": N("JBIG2Decode"),
-                            "Length": len(blob)}, blob)
-    out += b"%%EOF\n"
-    images = pdfobj.harvest_images(pdfobj.parse_document(bytes(out)))
-    assert images[0]["error"] is None
-    assert np.array_equal(images[0]["samples"],
-                          ((1 - want) * 255).reshape(h, w, 1))
-    df = spark.createDataFrame([("pdf://ht", bytearray(bytes(out)))],
-                               "url string, content binary")
-    r = pdf_image_features(df).collect()[0]
-    assert r["error"] is None and (r["width"], r["height"]) == (w, h)
 
 
 def test_halftone_edge_cases():

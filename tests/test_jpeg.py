@@ -1,6 +1,6 @@
 """Baseline JPEG codec (kernels/jpeg): round-trip PSNR across quality /
-subsampling / restart configurations, structural marker checks, error
-paths, and the media-dispatch integration.
+subsampling / restart configurations, structural marker checks and error
+paths.
 
 The encoder exists for tests/datagen; PSNR is measured against the
 ORIGINAL pixels, so an encoder bug cannot silently cancel a decoder bug
@@ -12,7 +12,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from pubscience_spark.kernels import jpeg, media
+from pubscience_spark.kernels import jpeg
 
 
 def _test_image(h=40, w=56, seed=7):
@@ -101,36 +101,6 @@ def test_error_paths():
     good = jpeg.encode_jpeg(_test_image(32, 32), quality=80)
     with pytest.raises(jpeg.JpegError):
         jpeg.decode_jpeg(good[:len(good) // 2])
-
-
-def test_media_dispatch_decodes_jpeg():
-    img = _test_image(24, 24)
-    arr = media.decode_image(jpeg.encode_jpeg(img, quality=90))
-    assert arr.shape == img.shape and arr.dtype == np.uint8
-    assert _psnr(arr, img) >= 35
-    feats = media.image_feature_vec(arr)
-    assert len(feats) > 0 and all(np.isfinite(feats))
-
-
-def test_image_features_operator_on_jpeg(spark):
-    """JPEG binaries flow through the Spark multimodal operator with
-    real decode — features populated, error column NULL; progressive
-    JPEG lands in the error column, never a task failure."""
-    from pubscience_spark.operators.multimodal import image_features
-    img = _test_image(24, 24)
-    good = jpeg.encode_jpeg(img, quality=90)
-    prog = bytearray(good)
-    i = prog.find(b"\xff\xc0")
-    prog[i + 1] = 0xC2
-    df = spark.createDataFrame(
-        [("u1", bytearray(good)), ("u2", bytearray(bytes(prog)))],
-        "url string, media binary")
-    rows = {r["url"]: r for r in
-            image_features(df, "media", fake=False).collect()}
-    assert rows["u1"]["error"] is None
-    assert rows["u1"]["width"] == 24 and rows["u1"]["height"] == 24
-    assert rows["u1"]["feature"] and all(np.isfinite(rows["u1"]["feature"]))
-    assert rows["u2"]["error"] and "progressive" in rows["u2"]["error"]
 
 
 def _with_exif(raw: bytes, orientation: int) -> bytes:

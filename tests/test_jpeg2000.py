@@ -1,6 +1,5 @@
 """JPEG 2000 (ITU-T T.800) codec: round trips across the option
-matrix against the in-repo spec encoder, named-error tiers, JP2 boxes,
-the PDF JPXDecode harvest route, and the Spark operator route."""
+matrix against the in-repo spec encoder, named-error tiers and JP2 boxes."""
 
 import numpy as np
 import pytest
@@ -193,82 +192,6 @@ def test_jp2_box_walk_errors():
         J._jp2_find_codestream(b"\x00\x00\x00\xFFjp2c")
 
 
-# --------------------------------------------------------------- PDF route
-
-
-def test_pdf_harvest_jpx(spark):
-    """JPXDecode XObjects through harvest_images (JP2-wrapped, raw
-    codestream, Flate cascade, RGB) AND the Spark pdf_image_features
-    route; an unsupported-feature stream lands in the error column."""
-    import zlib
-
-    from pubscience_spark.kernels import pdfobj
-    from pubscience_spark.operators.multimodal import pdf_image_features
-    from tests.test_pdfobj import N, _classic_obj
-
-    gray = _img(10, 20, seed=21)
-    rgb = _rgb(12, 9, seed=22)
-    jp2 = encode_jpx(gray, jp2=True, levels=1)
-    raw = encode_jpx(rgb, jp2=False, levels=1)
-    z = zlib.compress(jp2)
-    # user-precinct stream -> named error, not a raise
-    bad = bytearray(encode_jpx(gray, jp2=False, levels=1))
-    bad[bytes(bad).index(b"\xff\x52") + 4] = 0x01
-
-    out = bytearray(b"%PDF-1.5\n")
-    base = {"Type": N("XObject"), "Subtype": N("Image"),
-            "ColorSpace": N("DeviceGray"), "BitsPerComponent": 8}
-    out += _classic_obj(1, {**base, "Width": 20, "Height": 10,
-                            "Filter": N("JPXDecode"),
-                            "Length": len(jp2)}, jp2)
-    out += _classic_obj(2, {**base, "Width": 9, "Height": 12,
-                            "ColorSpace": N("DeviceRGB"),
-                            "Filter": N("JPXDecode"),
-                            "Length": len(raw)}, raw)
-    out += _classic_obj(3, {**base, "Width": 20, "Height": 10,
-                            "Filter": [N("FlateDecode"),
-                                       N("JPXDecode")],
-                            "DecodeParms": [None, {}],
-                            "Length": len(z)}, z)
-    out += _classic_obj(4, {**base, "Width": 20, "Height": 10,
-                            "Filter": N("JPXDecode"),
-                            "Length": len(bad)}, bytes(bad))
-    out += b"%%EOF\n"
-    images = pdfobj.harvest_images(pdfobj.parse_document(bytes(out)))
-    assert [im["error"] is None for im in images] \
-        == [True, True, True, False]
-    assert np.array_equal(images[0]["samples"],
-                          gray.reshape(10, 20, 1))
-    assert np.array_equal(images[1]["samples"], rgb)
-    assert np.array_equal(images[2]["samples"],
-                          gray.reshape(10, 20, 1))
-    assert "user-precincts" in images[3]["error"]
-
-    df = spark.createDataFrame([("pdf://jpx", bytearray(bytes(out)))],
-                               "url string, content binary")
-    rows = sorted(pdf_image_features(df).collect(),
-                  key=lambda r: r["image_index"])
-    assert [r["error"] is None for r in rows] \
-        == [True, True, True, False]
-    assert (rows[0]["width"], rows[0]["height"]) == (20, 10)
-    assert (rows[1]["width"], rows[1]["height"]) == (9, 12)
-    assert len(rows[1]["feature"]) == 8
-
-
-def test_media_decode_image_dispatch():
-    from pubscience_spark.kernels.media import decode_image
-    gray = _img(9, 9, seed=30)
-    for jp2 in (True, False):
-        arr = decode_image(encode_jpx(gray, jp2=jp2, levels=1))
-        assert arr.shape == (9, 9, 1) and arr.dtype == np.uint8
-        assert np.array_equal(arr[..., 0], gray)
-    # 16-bit displays as the high byte (TIFF-path convention)
-    img16 = _img(8, 8, seed=31, depth=16)
-    arr = decode_image(encode_jpx(img16, jp2=False, levels=1))
-    assert arr.dtype == np.uint8
-    assert np.array_equal(arr[..., 0], (img16 >> 8).astype(np.uint8))
-
-
 def test_coc_override_and_named_errors():
     """COC per-component overrides parse properly (round-7 review: the
     synthetic-COD hack put Scoc into the progression byte, so a
@@ -354,7 +277,6 @@ def test_display_mapping_depth_aware():
     blanket >>8 made 12-bit images 16x too dark and left sub-8-bit
     output unscaled)."""
     from pubscience_spark.kernels.jpeg2000 import to_display_uint8
-    from pubscience_spark.kernels.media import decode_image
 
     # 4-bit: encode with the 8-bit DC shift compensated (coeff =
     # value4 - 2^3 must survive the encoder's value8 - 2^7 shift),
@@ -369,7 +291,6 @@ def test_display_mapping_depth_aware():
     assert np.array_equal(got["samples"][..., 0], img)
     disp = to_display_uint8(got)
     assert np.array_equal(disp[..., 0], img * 17)  # 255/15
-    assert np.array_equal(decode_image(bytes(blob))[..., 0], img * 17)
 
     # 12-bit: a 16-bit stream's Ssiz patched down to 12, same shift
     # compensation (+ 2^15 - 2^11)

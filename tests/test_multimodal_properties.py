@@ -1,83 +1,7 @@
-"""Multimodal plumbing tests + hypothesis property tests for kernels."""
-
-import os
+"""Hypothesis property tests for the extraction and text kernels."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
-
-from pubscience_spark.operators import multimodal as mm
-
-
-def _media_df(spark):
-    return spark.createDataFrame(
-        [("u1", bytearray(b"\x89PNG fake bytes one")),
-         ("u2", bytearray(b"\x89PNG other bytes")),
-         ("u3", None)],
-        "url string, media binary")
-
-
-def test_image_features_schema_and_determinism(spark):
-    # fake=True: the Arrow round-trip shape on synthetic (random) bytes
-    rows = {r["url"]: r
-            for r in mm.image_features(_media_df(spark), fake=True).collect()}
-    assert set(rows) == {"u1", "u2", "u3"}
-    r1 = rows["u1"]
-    assert r1["error"] is None and len(r1["feature"]) == 8
-    assert 64 <= r1["width"] <= 255 and 64 <= r1["height"] <= 255
-    # deterministic across runs
-    again = {r["url"]: r
-             for r in mm.image_features(_media_df(spark), fake=True).collect()}
-    assert again["u1"]["feature"] == r1["feature"]
-
-
-def test_audio_features(spark):
-    rows = {r["url"]: r
-            for r in mm.audio_features(_media_df(spark), fake=True).collect()}
-    r = rows["u1"]
-    assert r["error"] is None
-    assert r["sample_rate"] in (8000, 16000, 22050, 44100)
-    assert r["duration_s"] > 0 and len(r["feature"]) == 8
-
-
-def test_video_frames_one_to_many(spark):
-    out = mm.video_frames(_media_df(spark), every_n=24, fake=True)
-    per_url = {r["url"]: r["n"] for r in
-               out.groupBy("url").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert per_url["u1"] >= 1 and per_url["u2"] >= 1
-    frames = [r for r in out.where(F.col("url") == "u1")
-              .orderBy("frame_no").collect()]
-    assert all(f["frame_no"] % 24 == 0 for f in frames if f["frame_no"] is not None)
-    assert all(f["ts_s"] is not None for f in frames)
-
-
-def test_real_decode_is_the_default_path(spark):
-    """Round-2 review: with NO env vars and no fake flag, decode is REAL —
-    committed-format PNG/WAV fixtures produce real pixels/samples, and
-    random bytes produce the error column (never blake2b features, never
-    a task failure)."""
-    assert os.environ.get("PUBSCIENCE_FAKE_DECODE") is None
-    import numpy as np
-
-    from pubscience_spark.kernels import media
-    arr = np.arange(6 * 4 * 3, dtype=np.uint8).reshape(6, 4, 3)
-    wav = media.encode_wav(8000, 0.3 * np.sin(np.arange(4000) / 20.0))
-    df = spark.createDataFrame(
-        [("u_png", bytearray(media.encode_png(arr))),
-         ("u_junk", bytearray(b"\x89PNG fake bytes one"))],
-        "url string, media binary")
-    rows = {r["url"]: r for r in mm.image_features(df).collect()}
-    assert (rows["u_png"]["width"], rows["u_png"]["height"]) == (4, 6)
-    assert rows["u_png"]["error"] is None
-    assert rows["u_junk"]["error"] and "UnsupportedFormat" in \
-        rows["u_junk"]["error"]
-    adf = spark.createDataFrame([("u_wav", bytearray(wav))],
-                                "url string, media binary")
-    arow = mm.audio_features(adf).collect()[0]
-    assert arow["sample_rate"] == 8000 and arow["error"] is None
-    # video has no stdlib decoder: default path surfaces the honest error
-    vrow = mm.video_frames(df.limit(1)).collect()[0]
-    assert vrow["error"] and "NotImplementedError" in vrow["error"]
 
 
 # --------------------------------------------------------------------------

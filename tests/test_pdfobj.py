@@ -568,273 +568,3 @@ def test_info_text_string_boms():
            b"%%EOF\n")
     objs = pdfobj.scan_objects(raw)
     assert pdfobj.document_info(objs)["Producer"] == "Scänner Pro"
-
-
-# ------------------------------------------- embedded image XObjects ----
-
-def _classic_obj(num: int, d: dict, stream: bytes | None = None) -> bytes:
-    body = f"{num} 0 obj\n".encode("ascii") + _ser(d)
-    if stream is not None:
-        body += (b"\nstream\n" + stream + b"\nendstream")
-    return body + b"\nendobj\n"
-
-
-def _pdf_with_images() -> tuple[bytes, "object"]:
-    """Classic-layout PDF embedding: a baseline JPEG XObject
-    (DCTDecode), a Flate raw RGB image, and a JPX one (unsupported →
-    error record). Returns (pdf_bytes, expected_jpeg_pixels)."""
-    import numpy as np
-    from pubscience_spark.kernels import jpeg
-    img = np.zeros((24, 32, 3), dtype=np.uint8)
-    img[:, :, 0] = np.linspace(0, 255, 32)[None, :]
-    img[:, :, 1] = 120
-    jpg = jpeg.encode_jpeg(img, quality=95)
-    rgb = np.arange(16 * 8 * 3, dtype=np.uint8).reshape(16, 8, 3)
-    out = bytearray(b"%PDF-1.5\n")
-    out += _classic_obj(1, {"Type": N("Catalog"), "Pages": R(2, 0)})
-    out += _classic_obj(2, {"Type": N("Pages"), "Kids": [R(3, 0)],
-                            "Count": 1})
-    out += _classic_obj(3, {"Type": N("Page"), "Parent": R(2, 0),
-                            "Resources": {"XObject": {"Im0": R(4, 0),
-                                                      "Im1": R(5, 0),
-                                                      "Im2": R(6, 0)}}})
-    out += _classic_obj(4, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 32, "Height": 24,
-                            "ColorSpace": N("DeviceRGB"),
-                            "BitsPerComponent": 8,
-                            "Filter": N("DCTDecode"),
-                            "Length": len(jpg)}, jpg)
-    flate = zlib.compress(rgb.tobytes())
-    out += _classic_obj(5, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 8, "Height": 16,
-                            "ColorSpace": N("DeviceRGB"),
-                            "BitsPerComponent": 8,
-                            "Filter": N("FlateDecode"),
-                            "Length": len(flate)}, flate)
-    out += _classic_obj(6, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 4, "Height": 4,
-                            "ColorSpace": N("DeviceRGB"),
-                            "BitsPerComponent": 8,
-                            "Filter": N("JPXDecode"),
-                            "Length": 4}, b"\x00\x00\x00\x00")
-    out += b"%%EOF\n"
-    return bytes(out), jpeg.decode_jpeg(jpg)
-
-
-def test_harvest_images_kernel():
-    import numpy as np
-    raw, jpeg_pixels = _pdf_with_images()
-    objs = pdfobj.parse_document(raw)
-    images = pdfobj.harvest_images(objs)
-    assert [im["filter"] for im in images] == \
-        ["DCTDecode", "FlateDecode", "JPXDecode"]
-    # DCT record carries the JPEG file bytes, decodable to known pixels
-    from pubscience_spark.kernels import jpeg as J
-    dec = J.decode_jpeg(images[0]["data"])
-    assert dec.shape == (24, 32, 3)
-    assert np.array_equal(dec, jpeg_pixels)
-    # raw Flate image decodes to the exact samples
-    assert images[1]["samples"].shape == (16, 8, 3)
-    assert images[1]["samples"][0, 0, 2] == 2
-    # unsupported codec → error record, no raise
-    assert images[2]["error"] and "JPXDecode" not in (
-        images[2]["error"] or "")[:0]  # error is set
-
-
-def test_pdf_image_features_spark_route(spark):
-    import numpy as np
-    from pubscience_spark.operators.multimodal import pdf_image_features
-    raw, jpeg_pixels = _pdf_with_images()
-    df = spark.createDataFrame([("pdf://a", bytearray(raw)),
-                                ("pdf://bad", bytearray(b"not a pdf"))],
-                               "url string, content binary")
-    rows = {(r["url"], r["image_index"]): r
-            for r in pdf_image_features(df).collect()}
-    a0 = rows[("pdf://a", 0)]
-    assert (a0["width"], a0["height"]) == (32, 24)
-    assert a0["filter"] == "DCTDecode" and a0["error"] is None
-    assert len(a0["feature"]) > 0
-    a1 = rows[("pdf://a", 1)]
-    assert (a1["width"], a1["height"]) == (8, 16) and a1["error"] is None
-    a2 = rows[("pdf://a", 2)]
-    assert a2["error"] and a2["feature"] is None
-    # corrupt input degrades to an error row for the document
-    bad = rows[("pdf://bad", None)]
-    assert bad["error"]
-
-
-def test_harvest_images_corrupt_streams_become_error_records():
-    """Round-5 review: zlib.error from corrupt FlateDecode, LZW KeyError,
-    and garbage /Width must land in the per-image error field — one
-    broken image never takes down the healthy ones."""
-    import numpy as np
-    from pubscience_spark.kernels import jpeg
-    img = np.full((8, 8, 3), 99, dtype=np.uint8)
-    jpg = jpeg.encode_jpeg(img, quality=90)
-    out = bytearray(b"%PDF-1.5\n")
-    out += _classic_obj(1, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 8, "Height": 8,
-                            "ColorSpace": N("DeviceRGB"),
-                            "BitsPerComponent": 8,
-                            "Filter": N("FlateDecode"),
-                            "Length": 9}, b"not zlib!")
-    out += _classic_obj(2, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": N("garbage"), "Height": 8,
-                            "ColorSpace": N("DeviceRGB"),
-                            "BitsPerComponent": 8,
-                            "Length": 3}, b"\x00\x01\x02")
-    out += _classic_obj(3, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 8, "Height": 8,
-                            "ColorSpace": N("DeviceRGB"),
-                            "BitsPerComponent": 8,
-                            "Filter": N("DCTDecode"),
-                            "Length": len(jpg)}, jpg)
-    out += b"%%EOF\n"
-    images = pdfobj.harvest_images(pdfobj.parse_document(bytes(out)))
-    assert len(images) == 3
-    assert "error" in images[0] and images[0]["error"]      # zlib.error
-    assert images[1]["error"]                               # bad /Width
-    assert images[2]["error"] is None                       # healthy JPEG
-    assert images[2]["data"] is not None
-
-
-def _pdf_with_ccitt() -> tuple[bytes, "object"]:
-    """Classic-layout PDF embedding CCITTFaxDecode XObjects (round 6):
-    G4 with default BlackIs1 (false → 0 bit is black), G4 BlackIs1
-    true, a Flate+CCITT cascade, and a raw 1-bpc Flate bilevel image."""
-    import numpy as np
-    from pubscience_spark.kernels.ccitt import encode_g4
-    black = np.zeros((10, 20), dtype=np.uint8)
-    black[2:8, 3:15] = 1
-    black[5, :] = 0
-    g4 = encode_g4(black)
-    bits = np.packbits(
-        np.pad(1 - black, ((0, 0), (0, 4))), axis=1).tobytes()
-    out = bytearray(b"%PDF-1.5\n")
-    out += _classic_obj(1, {"Type": N("Catalog"), "Pages": R(2, 0)})
-    out += _classic_obj(2, {"Type": N("Pages"), "Kids": [R(3, 0)],
-                            "Count": 1})
-    out += _classic_obj(3, {"Type": N("Page"), "Parent": R(2, 0),
-                            "Resources": {"XObject": {
-                                "Im0": R(4, 0), "Im1": R(5, 0),
-                                "Im2": R(6, 0), "Im3": R(7, 0)}}})
-    base = {"Type": N("XObject"), "Subtype": N("Image"),
-            "Width": 20, "Height": 10, "ColorSpace": N("DeviceGray"),
-            "BitsPerComponent": 1}
-    parms = {"K": -1, "Columns": 20, "Rows": 10}
-    out += _classic_obj(4, {**base, "Filter": N("CCITTFaxDecode"),
-                            "DecodeParms": parms,
-                            "Length": len(g4)}, g4)
-    out += _classic_obj(5, {**base, "Filter": N("CCITTFaxDecode"),
-                            "DecodeParms": {**parms, "BlackIs1": True},
-                            "Length": len(g4)}, g4)
-    zg4 = zlib.compress(g4)
-    out += _classic_obj(6, {**base,
-                            "Filter": [N("FlateDecode"),
-                                       N("CCITTFaxDecode")],
-                            "DecodeParms": [None, parms],
-                            "Length": len(zg4)}, zg4)
-    zbits = zlib.compress(bits)
-    out += _classic_obj(7, {**base, "Filter": N("FlateDecode"),
-                            "Length": len(zbits)}, zbits)
-    # /Decode [1 0]: producer-side bit-sense flip on a CCITT image —
-    # must invert the samples like the raw-sample path does
-    out += _classic_obj(8, {**base, "Filter": N("CCITTFaxDecode"),
-                            "DecodeParms": parms, "Decode": [1, 0],
-                            "Length": len(g4)}, g4)
-    out += b"%%EOF\n"
-    return bytes(out), black
-
-
-def test_harvest_images_ccitt():
-    """CCITT XObjects decode to sample-space (H, W, 1) uint8: default
-    BlackIs1=false puts black at 0; BlackIs1=true inverts; the filter
-    cascade applies Flate before the fax stage; raw 1-bpc images unpack
-    with row padding."""
-    import numpy as np
-    raw, black = _pdf_with_ccitt()
-    objs = pdfobj.parse_document(raw)
-    images = pdfobj.harvest_images(objs)
-    assert [im["error"] for im in images] == [None] * 5
-    assert [im["filter"] for im in images] == \
-        ["CCITTFaxDecode", "CCITTFaxDecode", "CCITTFaxDecode",
-         "FlateDecode", "CCITTFaxDecode"]
-    want = ((1 - black) * 255).reshape(10, 20, 1)
-    assert np.array_equal(images[0]["samples"], want)
-    assert np.array_equal(images[1]["samples"], 255 - want)
-    assert np.array_equal(images[2]["samples"], want)
-    assert np.array_equal(images[3]["samples"], want)
-    # /Decode [1 0] flips the bit sense (finding: previously ignored)
-    assert np.array_equal(images[4]["samples"], 255 - want)
-
-
-def test_harvest_images_ccitt_corrupt_is_error_record():
-    import numpy as np
-    raw, _ = _pdf_with_ccitt()
-    # truncate the first image's stream bytes in place: find its
-    # stream section and zero the G4 data → CCITTError → error record
-    start = raw.index(b"stream\n") + len(b"stream\n")
-    end = raw.index(b"\nendstream", start)
-    corrupted = raw[:start] + b"\x00" * (end - start) + raw[end:]
-    images = pdfobj.harvest_images(pdfobj.parse_document(corrupted))
-    assert images[0]["error"] and "ccitt" in images[0]["error"].lower()
-    assert images[1]["error"] is None       # later images unaffected
-    assert np.array_equal(
-        images[3]["samples"][:, :, 0] > 0,
-        (1 - _pdf_with_ccitt()[1]) > 0)
-
-
-def test_harvest_images_indexed_subbyte_and_decode():
-    """Round 6 raw-image shapes: 4-bit /Indexed palette lookup, 2-bit
-    gray scaling, and a [1 0] /Decode inversion on 8-bpc gray."""
-    import numpy as np
-    # 4-bit indexed, 3-entry RGB palette, width 5 (odd → row padding)
-    pal = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255])
-    idx_rows = [[0, 1, 2, 1, 0], [2, 2, 0, 0, 1]]
-    packed = bytearray()
-    for r in idx_rows:
-        bits = "".join(format(v, "04b") for v in r)
-        bits += "0" * (-len(bits) % 8)
-        packed += bytes(int(bits[i:i + 8], 2)
-                        for i in range(0, len(bits), 8))
-    z_idx = zlib.compress(bytes(packed))
-    # 2-bit gray 4x1: values 0..3 → 0, 85, 170, 255
-    z_g2 = zlib.compress(bytes([0b00011011]))
-    # 8-bpc gray with /Decode [1 0] inversion
-    z_inv = zlib.compress(bytes([0, 128, 255]))
-    out = bytearray(b"%PDF-1.5\n")
-    out += _classic_obj(1, {"Type": N("Catalog"), "Pages": R(2, 0)})
-    out += _classic_obj(2, {"Type": N("Pages"), "Kids": [R(3, 0)],
-                            "Count": 1})
-    out += _classic_obj(3, {"Type": N("Page"), "Parent": R(2, 0),
-                            "Resources": {"XObject": {
-                                "Im0": R(4, 0), "Im1": R(5, 0),
-                                "Im2": R(6, 0)}}})
-    out += _classic_obj(4, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 5, "Height": 2,
-                            "ColorSpace": [N("Indexed"), N("DeviceRGB"),
-                                           2, pal],
-                            "BitsPerComponent": 4,
-                            "Filter": N("FlateDecode"),
-                            "Length": len(z_idx)}, z_idx)
-    out += _classic_obj(5, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 4, "Height": 1,
-                            "ColorSpace": N("DeviceGray"),
-                            "BitsPerComponent": 2,
-                            "Filter": N("FlateDecode"),
-                            "Length": len(z_g2)}, z_g2)
-    out += _classic_obj(6, {"Type": N("XObject"), "Subtype": N("Image"),
-                            "Width": 3, "Height": 1,
-                            "ColorSpace": N("DeviceGray"),
-                            "BitsPerComponent": 8,
-                            "Decode": [1, 0],
-                            "Filter": N("FlateDecode"),
-                            "Length": len(z_inv)}, z_inv)
-    out += b"%%EOF\n"
-    images = pdfobj.harvest_images(pdfobj.parse_document(bytes(out)))
-    assert [im["error"] for im in images] == [None, None, None]
-    want = np.array([[list(pal[3 * v:3 * v + 3]) for v in r]
-                     for r in idx_rows], dtype=np.uint8)
-    assert np.array_equal(images[0]["samples"], want)
-    assert images[1]["samples"][:, :, 0].tolist() == [[0, 85, 170, 255]]
-    assert images[2]["samples"][:, :, 0].tolist() == [[255, 127, 0]]

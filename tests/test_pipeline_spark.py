@@ -154,21 +154,6 @@ def test_duplicate_marking(spark, pages_path, tmp_path):
         assert g["first"]["is_duplicate"] is False
 
 
-def test_dedup_strategies_equivalent(spark, pages_path, tmp_path):
-    """'windows' (wide shuffles) and 'slim-join' (slim windows + SHJ) must
-    mark exactly the same rows."""
-    pages = spark.read.parquet(pages_path)
-    flags = {}
-    for strat in ("windows", "slim-join"):
-        out = str(tmp_path / strat)
-        r = run_extraction(spark, pages, out, n_buckets=4,
-                           dedup_strategy=strat)
-        rows = spark.read.parquet(r["extracted_path"]) \
-            .select("url", "is_duplicate").collect()
-        flags[strat] = {row["url"]: row["is_duplicate"] for row in rows}
-    assert flags["windows"] == flags["slim-join"]
-
-
 def test_empty_input_is_a_noop(spark, tmp_path):
     empty = spark.createDataFrame(
         [], "url string, warc_ts timestamp, html binary, text string, "

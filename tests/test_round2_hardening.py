@@ -171,28 +171,10 @@ def test_rows_only_queries_golden_counts(spark):
 
 
 def test_round2_operators_on_degenerate_inputs(spark, tmp_path):
-    """Empty / truncated / zero-row inputs must degrade, not throw."""
-    import numpy as np
-    import pytest as _pt
-    from pubscience_spark.kernels import media
+    """Empty / zero-row inputs must degrade, not throw."""
     from pubscience_spark.operators.joins import salted_join
     from pubscience_spark.operators.util import spread
     from pubscience_spark.plans.curation import curate_corpus
-
-    # truncated media bytes → clean UnsupportedFormat OR a valid partial
-    # decode (a cut after the complete IDAT still yields pixels) — never
-    # an IndexError/struct.error escaping the kernel
-    png = media.encode_png(np.zeros((4, 4, 3), dtype=np.uint8))
-    for cut in (3, 10, 20, len(png) - 5):
-        try:
-            out = media.decode_image(png[:cut])
-            assert out.shape == (4, 4, 3)      # partial-but-complete decode
-        except media.UnsupportedFormat:
-            pass
-    wav = media.encode_wav(8000, np.zeros(100))
-    with _pt.raises(media.UnsupportedFormat):
-        media.decode_wav(wav[:20])
-    assert media.audio_feature_vec(8000, np.array([])) == [0.0] * 8
 
     # spread on an empty frame
     empty = spark.createDataFrame([], "doc_id long, lang string, text string")

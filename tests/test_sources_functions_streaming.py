@@ -262,6 +262,24 @@ def test_run_incremental_delta_only_and_idempotent(spark, tmp_path):
         == spark.read.parquet(str(in_dir)).select("url").distinct().count()
 
 
+def test_run_incremental_corrupt_lineage_raises(spark, tmp_path):
+    """An unreadable lineage log is a read failure, not "no batches
+    committed yet": reading it as empty would make the curated run
+    silently curate nothing (ADVICE r8 loader rule)."""
+    import pytest
+
+    from pubscience_spark.streaming.extract_stream import run_incremental
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    lineage = tmp_path / "out" / "lineage"
+    lineage.mkdir(parents=True)
+    (lineage / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        run_incremental(spark, str(in_dir), str(tmp_path / "out"),
+                        n_buckets=4)
+
+
 def test_run_incremental_curated_cross_run_dedup(spark, tmp_path):
     """VERDICT r4 #6: a duplicate arriving in batch 2 of a batch-1
     document is dropped ACROSS runs via the persistent keeper index;

@@ -12,7 +12,7 @@ import zlib
 import numpy as np
 import pytest
 
-from pubscience_spark.kernels import media, tiff
+from pubscience_spark.kernels import tiff
 from pubscience_spark.kernels.pdfobj import lzw_decode
 
 
@@ -239,14 +239,6 @@ def test_rgba_drops_alpha():
     img4 = _img(c=4)
     dec = tiff.decode_tiff(_write_tiff(img4))
     assert np.array_equal(dec, img4[:, :, :3])
-
-
-def test_media_dispatch_and_features():
-    img = _img()
-    arr = media.decode_image(_write_tiff(img, comp=8))
-    assert np.array_equal(arr, img)
-    feats = media.image_feature_vec(arr)
-    assert len(feats) > 0 and all(np.isfinite(feats))
 
 
 def test_error_paths():

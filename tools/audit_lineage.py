@@ -39,7 +39,7 @@ def audit(spark, out_dir: str) -> list[str]:
 def main() -> int:
     from pubscience_spark.session import get_spark
     out_dir = sys.argv[1]
-    spark = get_spark(app_name="lineage-audit", master="local[8]")
+    spark = get_spark(app_name="lineage-audit")
     spark.sparkContext.setLogLevel("ERROR")
     try:
         problems = audit(spark, out_dir)

@@ -29,12 +29,13 @@ def main() -> int:
     ap.add_argument("--min-words", type=int, default=20)
     ap.add_argument("--para-dedup", action="store_true",
                     help="C4-style corpus-wide paragraph dedup stage")
-    ap.add_argument("--master", default=None)
+    ap.add_argument("--master", default=None,
+                    help="Spark master (default local[$SPARK_GRAFT_CPUS])")
     args = ap.parse_args()
 
     from pubscience_spark.plans.curation import curate_corpus
     from pubscience_spark.session import get_spark
-    spark = get_spark(app_name="curate", master=args.master or "local[8]")
+    spark = get_spark(app_name="curate", master=args.master)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         manifest = curate_corpus(
