@@ -2,8 +2,8 @@
 
 Scanned-PDF image XObjects and bilevel TIFFs overwhelmingly carry
 CCITTFaxDecode (PDF) / compression 3-4 (TIFF) data; until round 6 these
-surfaced as named error records (the since-removed PDF image harvest,
-``kernels/tiff.py``). This module implements the codec from the public
+surfaced as named error records (the since-removed PDF image harvest
+and TIFF decoder). This module implements the codec from the public
 ITU-T specs:
 
 - Modified Huffman run-length tables (T.4 §2.2: white/black terminating

@@ -49,16 +49,21 @@ def _hash64(s: str) -> int:
 # spark.python.worker.reuse is on). Values are pure md5 — the cache
 # cannot change any hash, only skip recomputing it. Capacity-capped:
 # on overflow new words are hashed without being cached (first-come
-# residency is fine for Zipf — the common words arrive early).
+# residency is fine for Zipf — the common words arrive early). Tokens
+# longer than _WORD_CACHE_KEY_MAX (base64 blobs, urls, garbage runs) are
+# hashed but never cached: they are almost always unique, and caching
+# them would let a few documents fill the cache with megabytes of keys.
 _WORD_CACHE: dict[str, int] = {}
 _WORD_CACHE_MAX = 1 << 19  # ~0.5M words ≈ ≤100 MB per Python worker
+_WORD_CACHE_KEY_MAX = 64
 
 
 def word_hash64(w: str) -> int:
     h = _WORD_CACHE.get(w)
     if h is None:
         h = _hash64(w)
-        if len(_WORD_CACHE) < _WORD_CACHE_MAX:
+        if (len(w) <= _WORD_CACHE_KEY_MAX
+                and len(_WORD_CACHE) < _WORD_CACHE_MAX):
             _WORD_CACHE[w] = h
     return h
 
@@ -161,6 +166,13 @@ def minhash_bands(signature: list[int], bands: int = 16) -> list[str]:
         mixed = (chunks * _BAND_MIX[:rows][None, :]).sum(
             axis=1, dtype=np.uint64)
     return [f"{b}:{v:016x}" for b, v in enumerate(mixed.tolist())]
+
+
+# Names the key format :func:`minhash_bands` emits. Persistent band
+# indexes carry it as a column, so an index written with another format
+# (e.g. the md5 band keys before round 8) is refused instead of silently
+# matching nothing. Change it whenever the band key format changes.
+BAND_FMT = "u64mix"
 
 
 _BITS64 = np.arange(64, dtype=np.uint64)

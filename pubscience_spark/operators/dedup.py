@@ -2,9 +2,9 @@
 
 Spark-first design notes:
 - exact dedup uses the native ``sha2`` (JVM, codegen) — byte-equal to
-  Python's sha256 on UTF-8 text, verified in tests; keep-first is a
-  window ``row_number() == 1`` ordered by a total order (url / doc_id),
-  since the reference's "file order" is not reproducible
+  Python's sha256 on UTF-8 text, verified in tests; keep-first keeps
+  the minimum of a total order (url / doc_id) per key, since the
+  reference's "file order" is not reproducible
   (``deduplicate/deduplicater.py:47-60``, SURVEY.md §2.5);
 - near-dup follows shingle → minhash → band → bucket self-join: the
   LSH bands turn an O(n²) similarity search into a shuffle on band keys;
@@ -21,20 +21,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType
 
 from ..kernels import hashing as H
-
-
-def keep_first(df: DataFrame, key: str, order: str) -> DataFrame:
-    """Generic keep-first-per-key: window row_number over a total order."""
-    w = Window.partitionBy(key).orderBy(order)
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1).drop("__rn"))
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text",
-                order_col: str = "url") -> DataFrame:
-    """X1: sha256 exact dedup, keep first by ``order_col``."""
-    keyed = df.withColumn("sha256_key", F.sha2(F.col(text_col), 256))
-    return keep_first(keyed, "sha256_key", order_col)
 
 
 def mark_duplicates(df: DataFrame, key_col: str,
@@ -62,7 +48,7 @@ def _ensure_persisted(df: DataFrame) -> tuple[DataFrame, DataFrame | None]:
 
 
 def unpersist_input(marked: DataFrame) -> bool:
-    """Release the cache ``mark_duplicates_multi`` /
+    """Release the cache an operator such as
     ``mark_duplicates_incremental`` created internally (no-op when the
     caller had persisted the input itself). Call AFTER the terminal action
     on the marked DataFrame — the cache is what keeps the upstream
@@ -111,7 +97,7 @@ def _collapse_tuple_copies(marked: DataFrame, tuple_cols: list[str],
            if f.name in rest and not _is_orderable(f.dataType)]
     if bad:
         raise ValueError(
-            "mark_duplicates_multi/incremental: non-key column(s) "
+            "mark_duplicates_incremental: non-key column(s) "
             f"{bad} are not orderable (map-typed), so value-identical "
             "(order_col, keys) tuples cannot be collapsed "
             "deterministically — drop or serialize (to_json) these "
@@ -127,70 +113,40 @@ def _collapse_tuple_copies(marked: DataFrame, tuple_cols: list[str],
     return clean.unionByName(amb.select(*clean.columns))
 
 
-def mark_duplicates_multi(df: DataFrame, key_cols: list[str],
-                          order_col: str = "url",
-                          flag_col: str = "is_duplicate") -> DataFrame:
-    """OR-combined duplicate marking over several keys, shuffle-lean.
-
-    Naive per-key windows shuffle the FULL rows once per key — at 100 TB
-    that is two+ full-data shuffles of multi-KB text rows. Here the windows
-    run over a slim ``(order_col, keys)`` projection (tens of bytes/row),
-    and a single join on the distinct ``(order_col, keys)`` tuple carries
-    the flag back, so the wide rows shuffle exactly once. ``order_col``
-    need not be unique (round-7 review: the same url re-fetched with a
-    changed body is two distinct tuples, each flagged independently);
-    rows fully identical on ``(order_col, *key_cols)`` collapse to one
-    deterministic survivor via :func:`_collapse_tuple_copies`.
-
-    If the input was not already persisted this operator persists it
-    (both join sides read it); release that cache with
-    :func:`unpersist_input` on the returned DataFrame after your action.
-    """
-    df, persisted = _ensure_persisted(df)
-    slim = (df.select(order_col, *key_cols)
-            .groupBy(order_col, *key_cols)
-            .agg(F.count(F.lit(1)).alias("__tuple_n")))
-    flag = F.lit(False)
-    for key in key_cols:
-        # keeper-per-key via min() agg, NOT a row_number window: min() has
-        # map-side partial aggregation, so a viral page duplicated millions
-        # of times combines per-mapper instead of sorting one hot partition
-        # (windows have no combiner — the 10^12-doc straggler). The join
-        # back is slim-vs-tiny; AQE skew-join splits any hot probe key.
-        # Keys must be non-null (extraction always emits sha256/dedup_key).
-        keepers = slim.groupBy(key).agg(
-            F.min(order_col).alias(f"__keep_{key}"))
-        slim = slim.join(keepers, key)
-        flag = flag | (F.col(order_col) != F.col(f"__keep_{key}"))
-    flags = slim.select(order_col, *key_cols, "__tuple_n",
-                        flag.alias(flag_col))
-    # shuffle-hash join, building on the slim flags side: SMJ would SORT the
-    # wide rows (as costly as the per-key shuffles this function removes)
-    out = df.join(flags.hint("shuffle_hash"), [order_col, *key_cols])
-    out = _collapse_tuple_copies(out, [order_col, *key_cols], flag_col)
-    out._ps_persisted_input = persisted
-    return out
-
-
 def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
                                 order_col: str = "url",
                                 index_df: DataFrame | None = None,
                                 flag_col: str = "is_duplicate"
                                 ) -> tuple[DataFrame, DataFrame]:
-    """Duplicate marking that honors keepers committed by EARLIER runs.
+    """OR-combined keep-first duplicate marking over several keys — the
+    one exact-key marker, within a run and across runs.
 
-    Within one run, ``mark_duplicates_multi`` is enough; across
-    checkpoint-resume runs it is not — a reprocessed bucket only sees its
-    own rows, so a duplicate whose keeper committed in another bucket would
+    A row is a duplicate when, for any key, its ``order_col`` is not the
+    key's keeper (the minimum ``order_col`` among rows sharing the key).
+
+    Shuffle-lean: naive per-key windows shuffle the FULL rows once per
+    key — at 100 TB that is two+ full-data shuffles of multi-KB text
+    rows. Here the keepers come from a slim ``(order_col, keys)``
+    projection (tens of bytes/row), and a single join on the distinct
+    ``(order_col, keys)`` tuple carries the flag back, so the wide rows
+    shuffle exactly once. ``order_col`` need not be unique (round-7
+    review: the same url re-fetched with a changed body is two distinct
+    tuples, each flagged independently); rows fully identical on
+    ``(order_col, *key_cols)`` collapse to one deterministic survivor
+    via :func:`_collapse_tuple_copies`.
+
+    Across checkpoint-resume runs a reprocessed bucket only sees its own
+    rows, so a duplicate whose keeper committed in another bucket would
     go unmarked. ``index_df`` is the persistent keeper index
     ``(key_name, key, keeper)``; committed keepers always win (they are
-    already written as non-duplicates and cannot be retracted).
+    already written as non-duplicates and cannot be retracted). With
+    ``index_df=None`` every keeper is this run's own.
 
     Returns ``(marked_df, new_index_rows)`` — append ``new_index_rows`` to
     the index table after the data write commits. Appends may duplicate
     under crash-retry; ``load_keeper_index`` re-aggregates min() on read,
-    which keeps the index idempotent. As with ``mark_duplicates_multi``,
-    an unpersisted input is persisted internally — release it with
+    which keeps the index idempotent. An unpersisted input is persisted
+    internally (both join sides read it) — release it with
     :func:`unpersist_input` on ``marked_df`` after the terminal action.
     """
     spark = df.sparkSession
@@ -205,6 +161,12 @@ def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
     flag = F.lit(False)
     new_index = None
     for key in key_cols:
+        # keeper-per-key via min() agg, NOT a row_number window: min() has
+        # map-side partial aggregation, so a viral page duplicated millions
+        # of times combines per-mapper instead of sorting one hot partition
+        # (windows have no combiner — the 10^12-doc straggler). The join
+        # back is slim-vs-tiny; AQE skew-join splits any hot probe key.
+        # Keys must be non-null (extraction always emits sha256/dedup_key).
         run_keepers = slim.groupBy(key).agg(
             F.min(order_col).alias("__run_keep"))
         if index_df is not None:
@@ -230,6 +192,8 @@ def mark_duplicates_incremental(df: DataFrame, key_cols: list[str],
         flag = flag | (F.col(order_col) != F.col(f"__keep_{key}"))
     flags = slim.select(order_col, *key_cols, "__tuple_n",
                         flag.alias(flag_col))
+    # shuffle-hash join, building on the slim flags side: SMJ would SORT the
+    # wide rows (as costly as the per-key shuffles this function removes)
     marked = df.join(flags.hint("shuffle_hash"),
                      [order_col, *key_cols])
     marked = _collapse_tuple_copies(marked, [order_col, *key_cols],
@@ -266,6 +230,51 @@ def _read_index_or_none(spark, path: str) -> DataFrame | None:
         if "PATH_NOT_FOUND" in blob or "UNABLE_TO_INFER_SCHEMA" in blob:
             return None
         raise
+
+
+def _check_index_params(index_df: DataFrame, who: str, expected: dict,
+                        legacy_defaults: dict | None = None) -> None:
+    """Refuse a cross-run index built at other parameters: its keys are
+    incomparable with this run's, so the equi-join would silently stop
+    matching and prior duplicates would pass unflagged (round-5 review).
+
+    ``expected`` maps each parameter name to ``(source, value)``: the
+    index column (name or Column expression) and this run's value. A
+    missing column reads as its ``legacy_defaults`` entry, or is refused
+    with a rebuild error when it has none. The probe reads DISTINCT
+    tuples, not ``.first()``, so an index unioned from runs with mixed
+    parameters fails too (ADVICE r6); ``limit(2)`` keeps it O(1)."""
+    legacy_defaults = legacy_defaults or {}
+    cols = set(index_df.columns)
+    probe_cols = []
+    for name, (src, _) in expected.items():
+        if isinstance(src, str):
+            if src in cols:
+                src = F.col(src)
+            elif name in legacy_defaults:
+                src = F.lit(legacy_defaults[name])
+            else:
+                raise ValueError(
+                    f"{who}: index has no {name!r} column — it was "
+                    "written in an older format whose keys never match "
+                    "this run's; rebuild the index")
+        probe_cols.append(src.alias(name))
+    probes = (index_df.select(*probe_cols)
+              .distinct().limit(2).collect())
+    if len(probes) > 1:
+        raise ValueError(
+            f"{who}: index holds rows built at MIXED parameters "
+            f"({[tuple(p) for p in probes]} …) — it was likely assembled "
+            "by unioning incompatible runs; rebuild it at one "
+            f"({', '.join(expected)}) tuple")
+    if probes and any(probes[0][n] != v
+                      for n, (_, v) in expected.items()):
+        built = ", ".join(f"{n}={probes[0][n]!r}" for n in expected)
+        uses = ", ".join(f"{n}={v!r}" for n, (_, v) in expected.items())
+        raise ValueError(
+            f"{who}: index was built at {built} but this run uses "
+            f"{uses} — keys are incomparable across parameter changes; "
+            "rebuild the index")
 
 
 def load_keeper_index(spark, path: str) -> DataFrame | None:
@@ -313,10 +322,11 @@ def minhash_neardup_incremental(df: DataFrame, id_col: str,
     — the fuzzy analog of :func:`mark_duplicates_incremental`.
 
     ``index_df`` is the persistent signature index ``(doc_id string,
-    sig array<long>, bands array<string>, k int, seed int)`` holding
-    every previously KEPT document (~1 KB/doc at num_perm=128 —
-    signatures, never text; k/seed are build-parameter metadata for the
-    mismatch fail-fast).
+    sig array<long>, bands array<string>, k int, seed int, band_fmt
+    string)`` holding every previously KEPT document (~1 KB/doc at
+    num_perm=128 — signatures, never text; k/seed/band_fmt are
+    build-parameter metadata for the mismatch fail-fast,
+    :func:`_check_index_params`).
     A new document is flagged when it near-matches a prior document
     (LSH band collision → signature-agreement fraction ≥ ``threshold``,
     the datasketch criterion; prior text is gone so exact Jaccard is
@@ -330,44 +340,19 @@ def minhash_neardup_incremental(df: DataFrame, id_col: str,
     index (slim ids + band strings), signatures joined in only for the
     candidate pairs."""
     if index_df is not None:
-        # fail fast on a parameter mismatch: an index written at other
-        # num_perm/bands values hashes different band chunks, so the
-        # equi-join silently stops colliding and prior near-dups pass
-        # unflagged (round-5 review). k and seed change the SIGNATURES
-        # without changing array sizes — they ride the index as
-        # metadata columns so the same mismatch fails fast too
-        # (ADVICE r5; indexes written before round 6 lack the columns
-        # and are taken at the historical defaults k=3, seed=42).
-        cols = set(index_df.columns)
-        # Probe DISTINCT parameter tuples, not just .first(): an index
-        # accidentally unioned from runs with mixed parameters would
-        # pass a single-row probe yet silently stop colliding for the
-        # mismatched rows (ADVICE r6). limit(2) keeps the probe O(1)
-        # on the happy path.
-        probes = (index_df.select(
-            F.size("sig").alias("np"), F.size("bands").alias("nb"),
-            (F.col("k") if "k" in cols else F.lit(3)).alias("k"),
-            (F.col("seed") if "seed" in cols
-             else F.lit(42)).alias("seed"))
-            .distinct().limit(2).collect())
-        if len(probes) > 1:
-            raise ValueError(
-                "minhash_neardup_incremental: index holds rows built "
-                "at MIXED parameters "
-                f"({[tuple(p) for p in probes]} …) — it was likely "
-                "assembled by unioning incompatible runs; rebuild it "
-                "at one (num_perm, bands, k, seed) tuple")
-        probe = probes[0] if probes else None
-        if probe is not None and (
-                probe["np"] != num_perm or probe["nb"] != bands
-                or probe["k"] != k or probe["seed"] != seed):
-            raise ValueError(
-                f"minhash_neardup_incremental: index was built at "
-                f"num_perm={probe['np']}, bands={probe['nb']}, "
-                f"k={probe['k']}, seed={probe['seed']} but this run "
-                f"uses num_perm={num_perm}, bands={bands}, k={k}, "
-                f"seed={seed} — signatures are incomparable across "
-                f"parameter changes")
+        # k and seed change the SIGNATURES without changing array sizes,
+        # and band_fmt names the band key format — they ride the index as
+        # metadata columns (ADVICE r5, r8). Indexes written before round
+        # 6 lack k/seed and are read at the historical defaults k=3,
+        # seed=42; one without band_fmt predates the uint64 band keys and
+        # is refused
+        _check_index_params(
+            index_df, "minhash_neardup_incremental",
+            {"num_perm": (F.size("sig"), num_perm),
+             "bands": (F.size("bands"), bands),
+             "k": ("k", k), "seed": ("seed", seed),
+             "band_fmt": ("band_fmt", H.BAND_FMT)},
+            legacy_defaults={"k": 3, "seed": 42})
     udf = minhash_index_udf(num_perm=num_perm, bands=bands, k=k,
                             seed=seed)
     from pyspark.storagelevel import StorageLevel
@@ -388,16 +373,8 @@ def minhash_neardup_incremental(df: DataFrame, id_col: str,
                   .where(F.col("x.id") < F.col("y.id"))
                   .select(F.col("x.id").alias("id_a"),
                           F.col("y.id").alias("id_b")).distinct())
-    texts = withsig.select(F.col(id_col).alias("id"),
-                           F.col(text_col).alias("t"))
-    pairs = (cand_pairs
-             .join(texts.withColumnRenamed("id", "id_a")
-                   .withColumnRenamed("t", "t_a"), "id_a")
-             .join(texts.withColumnRenamed("id", "id_b")
-                   .withColumnRenamed("t", "t_b"), "id_b")
-             .withColumn("jaccard", _jaccard_pair_udf_1pass(F.col("t_a"),
-                                                            F.col("t_b")))
-             .where(F.col("jaccard") >= threshold))
+    pairs = _verified_pairs(cand_pairs, withsig.select(
+        F.col(id_col).alias("id"), F.col(text_col).alias("t")), threshold)
     run_dups = pairs.select(F.col("id_b").alias(id_col)).distinct()
 
     if index_df is not None:
@@ -428,7 +405,8 @@ def minhash_neardup_incremental(df: DataFrame, id_col: str,
                          F.col("__sig").alias("sig"),
                          F.col("__bands").alias("bands"),
                          F.lit(k).alias("k"),
-                         F.lit(seed).alias("seed")))
+                         F.lit(seed).alias("seed"),
+                         F.lit(H.BAND_FMT).alias("band_fmt")))
     marked = marked.drop("__sig", "__bands")
     marked._ps_persisted_input = withsig
     return marked, new_index
@@ -525,6 +503,21 @@ def _jaccard_pair_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
 _jaccard_pair_udf_1pass = _jaccard_pair_udf.asNondeterministic()
 
 
+def _verified_pairs(cands: DataFrame, texts: DataFrame,
+                    threshold: float) -> DataFrame:
+    """Exact Jaccard verification of candidate pairs ``(id_a, id_b)``
+    against ``texts (id, t)``: texts are fetched via two joins so only
+    candidate rows move; keeps pairs with ``jaccard >= threshold``."""
+    return (cands
+            .join(texts.withColumnRenamed("id", "id_a")
+                  .withColumnRenamed("t", "t_a"), "id_a")
+            .join(texts.withColumnRenamed("id", "id_b")
+                  .withColumnRenamed("t", "t_b"), "id_b")
+            .withColumn("jaccard", _jaccard_pair_udf_1pass(F.col("t_a"),
+                                                           F.col("t_b")))
+            .where(F.col("jaccard") >= threshold))
+
+
 def minhash_neardup(df: DataFrame, id_col: str, text_col: str = "text",
                     threshold: float = 0.8, bands: int = 16,
                     num_perm: int = 128) -> DataFrame:
@@ -536,18 +529,9 @@ def minhash_neardup(df: DataFrame, id_col: str, text_col: str = "text",
     Jaccard=t is 1-(1-t^(num_perm/bands))^bands."""
     cands = minhash_candidates(df, id_col, text_col, bands=bands,
                                num_perm=num_perm)
-    texts = df.select(F.col(id_col).alias("id"),
-                      F.col(text_col).alias("t"))
-    pairs = (cands
-             .join(texts.withColumnRenamed("id", "id_a")
-                   .withColumnRenamed("t", "t_a"), "id_a")
-             .join(texts.withColumnRenamed("id", "id_b")
-                   .withColumnRenamed("t", "t_b"), "id_b"))
-    out = (pairs.withColumn("jaccard",
-                            _jaccard_pair_udf_1pass(F.col("t_a"),
-                                                    F.col("t_b")))
-           .where(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", "jaccard"))
+    out = _verified_pairs(cands, df.select(F.col(id_col).alias("id"),
+                                           F.col(text_col).alias("t")),
+                          threshold).select("id_a", "id_b", "jaccard")
     handle = getattr(cands, "_ps_persisted_input", None)
     if handle is not None:
         out._ps_persisted_input = handle  # noqa: SLF001
@@ -670,177 +654,11 @@ def paragraph_dedup_incremental(df: DataFrame, id_col: str = "doc_id",
                                 index_df: DataFrame | None = None,
                                 out_col: str | None = None
                                 ) -> tuple[DataFrame, DataFrame]:
-    """:func:`paragraph_dedup` that honors paragraphs committed by
-    EARLIER runs — the paragraph-level analog of
-    :func:`mark_duplicates_incremental` (VERDICT r6 #6: without this,
-    ``run_incremental_curated``'s paragraph winners reset every run and
-    a mirror paragraph arriving one run later is kept).
-
-    ``index_df`` is the persistent winner index ``(key long, key2
-    long, d string, i int, min_chars int, normalize boolean, sep
-    string)``: the 128-bit paired paragraph keys every previous run
-    KEPT, plus the winner's identity — so a crash-retry that re-marks
-    its own batch still keeps the SAME winner occurrence (prior wins
-    by identity, not by dropping everything known) — plus the build
-    parameters as metadata for the mismatch fail-fast (keys built at a
-    different ``normalize``/``min_chars``/``sep`` are incomparable;
-    the :func:`minhash_neardup_incremental` distinct-probe pattern).
-
-    Returns ``(result_df, new_index_rows)`` — result as
-    :func:`paragraph_dedup`; append the new rows AFTER (or, for the
-    crash-safe streaming order, BEFORE) the data write commits.
-    Duplicate appends are harmless: rows are fully deterministic and
-    :func:`load_paragraph_index` de-duplicates on read. Winner doc ids
-    are stored as STRING (cross-run schema stability); prior-winner
-    matching is by string equality, while within-run winner ORDERING
-    stays on the native id type.
-
-    The identity match is how a crash-RETRY keeps its own winner — so
-    ``id_col`` values must be unique PER INGESTION EVENT. If the same
-    logical id can legitimately re-appear in a later run (a re-crawled
-    url whose body changed), key on something ingestion-unique (e.g.
-    ``url#batch_id``, as ``run_incremental_curated`` does) or the
-    re-appearance is mistaken for a retry and keeps its boilerplate
-    (round-7 review)."""
-    out_col = out_col or text_col
-    n_salt = max(1, int(salt))
-    if index_df is not None:
-        probes = (index_df.select("min_chars", "normalize", "sep")
-                  .distinct().limit(2).collect())
-        if len(probes) > 1:
-            raise ValueError(
-                "paragraph_dedup_incremental: index holds rows built "
-                f"at MIXED parameters ({[tuple(p) for p in probes]}) "
-                "— rebuild it at one (min_chars, normalize, sep)")
-        if probes and (probes[0]["min_chars"] != min_chars
-                       or probes[0]["normalize"] != normalize
-                       or probes[0]["sep"] != sep):
-            p = probes[0]
-            raise ValueError(
-                "paragraph_dedup_incremental: index was built at "
-                f"min_chars={p['min_chars']}, normalize="
-                f"{p['normalize']}, sep={p['sep']!r} but this run "
-                f"uses min_chars={min_chars}, normalize={normalize}, "
-                f"sep={sep!r} — paragraph keys are incomparable")
-    df, persisted = _ensure_persisted(df)
-    keyed, exempt = _paragraph_keyed(df, id_col, text_col,
-                                     sep=sep, min_chars=min_chars,
-                                     normalize=normalize)
-    run_winners = (keyed.groupBy("__key", "__key2")
-                   .agg(F.min(F.struct(F.col("__doc").alias("d"),
-                                       F.col("__idx").alias("i")))
-                        .alias("__w")))
-    if index_df is not None:
-        prior = index_df.select(
-            F.col("key").alias("__key"), F.col("key2").alias("__key2"),
-            F.struct(F.col("d"), F.col("i")).alias("__pw"))
-        run_winners = run_winners.join(prior, ["__key", "__key2"],
-                                       "left")
-    else:
-        run_winners = run_winners.withColumn(
-            "__pw", F.lit(None).cast("struct<d:string,i:int>"))
-    new_index = (run_winners.where(F.col("__pw").isNull())
-                 .select("__key", "__key2",
-                         F.col("__w.d").cast("string").alias("d"),
-                         F.col("__w.i").cast("int").alias("i"))
-                 .withColumnRenamed("__key", "key")
-                 .withColumnRenamed("__key2", "key2")
-                 .withColumn("min_chars", F.lit(int(min_chars)))
-                 .withColumn("normalize", F.lit(bool(normalize)))
-                 .withColumn("sep", F.lit(sep)))
-    keyed = keyed.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(F.col("__doc"), F.col("__idx")),
-               F.lit(n_salt)).cast("int"))
-    winners = run_winners.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-    is_winner = F.when(
-        F.col("__pw").isNotNull(),
-        (F.col("__doc").cast("string") == F.col("__pw.d"))
-        & (F.col("__idx") == F.col("__pw.i"))).otherwise(
-        (F.col("__w.d") == F.col("__doc"))
-        & (F.col("__w.i") == F.col("__idx")))
-    kept = (keyed.join(winners, ["__key", "__key2", "__salt"])
-            .where(is_winner)
-            .drop("__w", "__pw", "__salt")
-            .unionByName(exempt))
-    result = _paragraph_reassemble(kept, df, id_col, text_col,
-                                   out_col=out_col, sep=sep)
-    if persisted is not None:
-        result._ps_persisted_input = persisted  # noqa: SLF001
-    return result, new_index
-
-
-def load_paragraph_index(spark, path: str) -> DataFrame | None:
-    """Read the paragraph winner index; duplicate crash-retry appends
-    collapse via distinct() (rows are fully deterministic). Missing
-    path → None; real read failures propagate (see
-    :func:`_read_index_or_none`)."""
-    raw = _read_index_or_none(spark, path)
-    if raw is None:
-        return None
-    return raw.distinct()
-
-
-def _paragraph_keyed(df: DataFrame, id_col: str, text_col: str, *,
-                     sep: str, min_chars: int, normalize: bool
-                     ) -> tuple[DataFrame, DataFrame]:
-    """Shared front half of the paragraph dedups: posexplode + paired
-    128-bit keys, split into (keyed, exempt) — see
-    :func:`paragraph_dedup` for the rationale."""
-    paras = (df.select(
-        F.col(id_col).alias("__doc"),
-        F.posexplode(F.split(F.col(text_col), F.lit(sep)))
-        .alias("__idx", "__para")))
-    norm = F.lower(F.regexp_replace(F.trim(F.col("__para")),
-                                    r"\s+", " ")) if normalize \
-        else F.col("__para")
-    is_short = F.length(F.trim(F.col("__para"))) < min_chars
-    paras = (paras
-             .withColumn("__key", F.when(is_short, F.lit(None))
-                         .otherwise(F.xxhash64(norm)))
-             .withColumn("__key2", F.when(is_short, F.lit(None))
-                         .otherwise(F.xxhash64(F.lit(0x9E3779B9), norm))))
-    # exempt (short) paragraphs bypass the join entirely — joining them
-    # with a NULL key would funnel every short paragraph in the corpus
-    # into the single hash(NULL) partition (skew trap)
-    return (paras.where(F.col("__key").isNotNull()),
-            paras.where(F.col("__key").isNull()))
-
-
-def _paragraph_reassemble(kept: DataFrame, df: DataFrame, id_col: str,
-                          text_col: str, *, out_col: str,
-                          sep: str) -> DataFrame:
-    """Shared back half: order-restoring reassembly + counters."""
-    packed = F.array_sort(F.collect_list(
-        F.struct(F.col("__idx").alias("i"), F.col("__para").alias("p"))))
-    n_in = F.count(F.lit(1))
-    return (kept.groupBy(F.col("__doc").alias(id_col))
-            .agg(F.array_join(F.transform(packed, lambda s: s["p"]),
-                              sep).alias(out_col),
-                 n_in.cast("long").alias("n_paras_kept"))
-            .join(df.select(F.col(id_col),
-                            (F.size(F.split(F.col(text_col), F.lit(sep))))
-                            .cast("long").alias("__n_in")),
-                  id_col, "right")
-            .withColumn("n_paras_kept",
-                        F.coalesce("n_paras_kept", F.lit(0)))
-            .withColumn("n_paras_dropped",
-                        F.col("__n_in") - F.col("n_paras_kept"))
-            .withColumn(out_col, F.coalesce(out_col, F.lit("")))
-            .drop("__n_in"))
-
-
-def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", *,
-                    sep: str = "\n\n", min_chars: int = 30,
-                    normalize: bool = True,
-                    salt: int = 8,
-                    out_col: str | None = None) -> DataFrame:
     """Corpus-wide paragraph dedup: any paragraph whose (normalized)
-    content already appeared earlier keeps only its FIRST occurrence
-    (ordered by ``(id_col, paragraph index)``); every document is then
-    reassembled from its surviving paragraphs in original order. The
+    content already appeared earlier — in this run or in a run committed
+    to ``index_df`` — keeps only its FIRST occurrence (ordered by
+    ``(id_col, paragraph index)``); every document is then reassembled
+    from its surviving paragraphs in original order. The
     C4/RefinedWeb/Dolma line-level recipe — it kills boilerplate that
     repeats across pages (cookie banners, nav footers, license blocks)
     which document-level dedup cannot see.
@@ -868,28 +686,131 @@ def paragraph_dedup(df: DataFrame, id_col: str = "doc_id",
     them is (hash pair, winner-struct) slim — ×``salt`` replication of
     slim rows is the price of the even spread. ``salt=1`` disables.
 
-    Returns ``id_col`` plus the deduped text (``out_col``, default
+    Across runs (VERDICT r6 #6: without the index,
+    ``run_incremental_curated``'s paragraph winners reset every run and
+    a mirror paragraph arriving one run later is kept), ``index_df`` is
+    the persistent winner index ``(key long, key2 long, d string, i int,
+    min_chars int, normalize boolean, sep string)``: the 128-bit paired
+    paragraph keys every previous run KEPT, plus the winner's identity —
+    so a crash-retry that re-marks its own batch still keeps the SAME
+    winner occurrence (prior wins by identity, not by dropping
+    everything known) — plus the build parameters as metadata for the
+    mismatch fail-fast (keys built at a different
+    ``normalize``/``min_chars``/``sep`` are incomparable,
+    :func:`_check_index_params`). ``index_df=None`` dedups within the
+    run only.
+
+    Returns ``(result_df, new_index_rows)``. ``result_df`` holds
+    ``id_col`` plus the deduped text (``out_col``, default
     ``text_col``) and ``n_paras_kept`` / ``n_paras_dropped`` counters.
-    """
+    Append the new index rows AFTER (or, for the crash-safe streaming
+    order, BEFORE) the data write commits. Duplicate appends are
+    harmless: rows are fully deterministic and
+    :func:`load_paragraph_index` de-duplicates on read. Winner doc ids
+    are stored as STRING (cross-run schema stability); prior-winner
+    matching is by string equality, while within-run winner ORDERING
+    stays on the native id type. An unpersisted input is persisted
+    internally — release it with :func:`unpersist_input` on
+    ``result_df`` after the terminal action.
+
+    The identity match is how a crash-RETRY keeps its own winner — so
+    ``id_col`` values must be unique PER INGESTION EVENT. If the same
+    logical id can legitimately re-appear in a later run (a re-crawled
+    url whose body changed), key on something ingestion-unique (e.g.
+    ``url#batch_id``, as ``run_incremental_curated`` does) or the
+    re-appearance is mistaken for a retry and keeps its boilerplate
+    (round-7 review)."""
     out_col = out_col or text_col
-    keyed, exempt = _paragraph_keyed(df, id_col, text_col, sep=sep,
-                                     min_chars=min_chars,
-                                     normalize=normalize)
-    winners = (keyed.groupBy("__key", "__key2")
-               .agg(F.min(F.struct(F.col("__doc").alias("d"),
-                                   F.col("__idx").alias("i")))
-                    .alias("__w")))
     n_salt = max(1, int(salt))
+    if index_df is not None:
+        _check_index_params(
+            index_df, "paragraph_dedup_incremental",
+            {"min_chars": ("min_chars", min_chars),
+             "normalize": ("normalize", normalize),
+             "sep": ("sep", sep)})
+    df, persisted = _ensure_persisted(df)
+    paras = df.select(
+        F.col(id_col).alias("__doc"),
+        F.posexplode(F.split(F.col(text_col), F.lit(sep)))
+        .alias("__idx", "__para"))
+    norm = F.lower(F.regexp_replace(F.trim(F.col("__para")),
+                                    r"\s+", " ")) if normalize \
+        else F.col("__para")
+    is_short = F.length(F.trim(F.col("__para"))) < min_chars
+    paras = (paras
+             .withColumn("__key", F.when(is_short, F.lit(None))
+                         .otherwise(F.xxhash64(norm)))
+             .withColumn("__key2", F.when(is_short, F.lit(None))
+                         .otherwise(F.xxhash64(F.lit(0x9E3779B9), norm))))
+    # exempt (short) paragraphs bypass the join entirely — joining them
+    # with a NULL key would funnel every short paragraph in the corpus
+    # into the single hash(NULL) partition (skew trap)
+    keyed = paras.where(F.col("__key").isNotNull())
+    exempt = paras.where(F.col("__key").isNull())
+    run_winners = (keyed.groupBy("__key", "__key2")
+                   .agg(F.min(F.struct(F.col("__doc").alias("d"),
+                                       F.col("__idx").alias("i")))
+                        .alias("__w")))
+    if index_df is not None:
+        prior = index_df.select(
+            F.col("key").alias("__key"), F.col("key2").alias("__key2"),
+            F.struct(F.col("d"), F.col("i")).alias("__pw"))
+        run_winners = run_winners.join(prior, ["__key", "__key2"],
+                                       "left")
+    else:
+        run_winners = run_winners.withColumn(
+            "__pw", F.lit(None).cast("struct<d:string,i:int>"))
+    new_index = (run_winners.where(F.col("__pw").isNull())
+                 .select(F.col("__key").alias("key"),
+                         F.col("__key2").alias("key2"),
+                         F.col("__w.d").cast("string").alias("d"),
+                         F.col("__w.i").cast("int").alias("i"),
+                         F.lit(int(min_chars)).alias("min_chars"),
+                         F.lit(bool(normalize)).alias("normalize"),
+                         F.lit(sep).alias("sep")))
     keyed = keyed.withColumn(
         "__salt",
         F.pmod(F.xxhash64(F.col("__doc"), F.col("__idx")),
                F.lit(n_salt)).cast("int"))
-    winners = winners.withColumn(
+    winners = run_winners.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+    is_winner = F.when(
+        F.col("__pw").isNotNull(),
+        (F.col("__doc").cast("string") == F.col("__pw.d"))
+        & (F.col("__idx") == F.col("__pw.i"))).otherwise(
+        (F.col("__w.d") == F.col("__doc"))
+        & (F.col("__w.i") == F.col("__idx")))
     kept = (keyed.join(winners, ["__key", "__key2", "__salt"])
-            .where((F.col("__w.d") == F.col("__doc"))
-                   & (F.col("__w.i") == F.col("__idx")))
-            .drop("__w", "__salt")
+            .where(is_winner)
+            .drop("__w", "__pw", "__salt")
             .unionByName(exempt))
-    return _paragraph_reassemble(kept, df, id_col, text_col,
-                                 out_col=out_col, sep=sep)
+    # order-restoring reassembly + counters
+    packed = F.array_sort(F.collect_list(
+        F.struct(F.col("__idx").alias("i"), F.col("__para").alias("p"))))
+    result = (kept.groupBy(F.col("__doc").alias(id_col))
+              .agg(F.array_join(F.transform(packed, lambda s: s["p"]),
+                                sep).alias(out_col),
+                   F.count(F.lit(1)).cast("long").alias("n_paras_kept"))
+              .join(df.select(F.col(id_col),
+                              F.size(F.split(F.col(text_col), F.lit(sep)))
+                              .cast("long").alias("__n_in")),
+                    id_col, "right")
+              .withColumn("n_paras_kept",
+                          F.coalesce("n_paras_kept", F.lit(0)))
+              .withColumn("n_paras_dropped",
+                          F.col("__n_in") - F.col("n_paras_kept"))
+              .withColumn(out_col, F.coalesce(out_col, F.lit("")))
+              .drop("__n_in"))
+    result._ps_persisted_input = persisted  # noqa: SLF001
+    return result, new_index
+
+
+def load_paragraph_index(spark, path: str) -> DataFrame | None:
+    """Read the paragraph winner index; duplicate crash-retry appends
+    collapse via distinct() (rows are fully deterministic). Missing
+    path → None; real read failures propagate (see
+    :func:`_read_index_or_none`)."""
+    raw = _read_index_or_none(spark, path)
+    if raw is None:
+        return None
+    return raw.distinct()

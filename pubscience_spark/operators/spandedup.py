@@ -27,15 +27,15 @@ Semantics (token level, deterministic):
 
 Keep-first means the first occurrence (by ``(doc, pos)``) of any
 duplicated content survives verbatim — exactly the document-level
-``exact_dedup`` rule pushed down to spans.
+exact-dedup keep-first rule pushed down to spans.
 
 Scale shape (mark generation is ALL native JVM, no Python):
 tokens via ``regexp_extract_all`` → per-token ``xxhash64`` (once per
 token, so gram hashing reads 8·n bytes of longs instead of re-reading
 token bytes) → gram keys = PAIRED independent ``xxhash64`` over the
 length-n hash slice (128-bit effective; a single 64-bit key has ~50%
-birthday odds at ~5e9 distinct grams — the ``paragraph_dedup``
-precedent) → posexplode to slim ``(k, k2, doc, pos)`` rows → per-key
+birthday odds at ~5e9 distinct grams — the
+``paragraph_dedup_incremental`` precedent) → posexplode to slim ``(k, k2, doc, pos)`` rows → per-key
 ``min(struct(doc, pos))`` + count agg (map-side combine, hot-key safe)
 → ``count > 1`` filter drops the unique-gram majority BEFORE the join
 → SALTED equi-join back (winner rows replicated ×salt, occurrences

@@ -115,7 +115,8 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, out_dir: str, *,
     when similarity chains span templates (a~c, b~c: "pairs" keeps a
     AND b, "cluster" keeps only a).
     ``para_dedup`` (opt-in) runs corpus-wide paragraph-level dedup (the
-    C4/RefinedWeb recipe, :func:`operators.dedup.paragraph_dedup`) over
+    C4/RefinedWeb recipe,
+    :func:`operators.dedup.paragraph_dedup_incremental`) over
     the doc-dedup survivors: cross-page boilerplate paragraphs keep one
     occurrence, documents emptied entirely are dropped. Runs BEFORE
     decontamination so eval n-grams are checked against the final text.
@@ -231,9 +232,9 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, out_dir: str, *,
     n_paras_dropped, n_para_emptied = 0, 0
     pd_out = None
     if para_dedup:
-        from ..operators.dedup import paragraph_dedup as _para_dedup
-        pd_out = _para_dedup(kept.select(id_col, text_col), id_col,
-                             text_col, min_chars=para_min_chars).persist()
+        pd_out = dedup_ops.paragraph_dedup_incremental(
+            kept.select(id_col, text_col), id_col, text_col,
+            min_chars=para_min_chars, index_df=None)[0].persist()
         stats = pd_out.agg(
             F.coalesce(F.sum("n_paras_dropped"), F.lit(0))
             .cast("long").alias("pd"),
@@ -327,6 +328,7 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, out_dir: str, *,
     flagged.unpersist()
     exact.unpersist()
     if pd_out is not None:
+        dedup_ops.unpersist_input(pd_out)
         pd_out.unpersist()
     if es_out is not None:
         dedup_ops.unpersist_input(es_out)

@@ -57,6 +57,33 @@ def plan_buckets(pages: DataFrame, target_bytes: int = BYTES_PER_BUCKET,
     return max(min_buckets, math.ceil(total / target_bytes))
 
 
+def lineage_checksum():
+    """Per-bucket content checksum: Σcrc32(url|sha256). Order-free, so the
+    lineage writers and the audit (``tools/audit_lineage.py``) agree on
+    any row order."""
+    return F.sum(F.crc32(F.concat_ws("|", "url", "sha256")))
+
+
+def lineage_rows(df: DataFrame) -> DataFrame:
+    """One lineage row per bucket of an extracted frame, in the layout
+    both batch and streaming (which adds ``batch_id``) write.
+    ``dup_count`` is NULL when ``df`` has no ``is_duplicate`` flag."""
+    if "is_duplicate" in df.columns:
+        dups = F.sum(F.when(F.col("is_duplicate"), 1).otherwise(0))
+    else:
+        dups = F.lit(None).cast("long")
+    return (df.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("row_count"),
+        dups.alias("dup_count"),
+        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
+        .alias("error_count"),
+        lineage_checksum().alias("checksum"),
+        F.sum("cpu_seconds").alias("wall_time_s"))
+        .withColumn("input_split",
+                    F.concat(F.lit("bucket="), F.col("bucket")))
+        .withColumn("committed_at", F.current_timestamp()))
+
+
 def committed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | None:
     """Buckets whose lineage row exists (= committed). Missing/empty
     lineage → None (nothing committed yet); a genuine read failure
@@ -192,17 +219,9 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
     if committed is not None and skipped:
         new_buckets = written.join(F.broadcast(committed), "bucket",
                                    "left_anti")
-    lineage = (new_buckets.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.sum(F.when(F.col("is_duplicate"), 1).otherwise(0)).alias("dup_count"),
-        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("error_count"),
-        F.sum(F.crc32(F.concat_ws("|", "url", "sha256"))).alias("checksum"),
-        F.sum("cpu_seconds").alias("wall_time_s"))
-        .withColumn("input_split", F.concat(F.lit("bucket="), F.col("bucket")))
-        .withColumn("committed_at", F.current_timestamp()))
     # lineage is tiny (one row per bucket): cache it so the commit write and
     # the row-count report share one scan of the written table
-    lineage = lineage.cache()
+    lineage = lineage_rows(new_buckets).cache()
     lineage.write.mode("append").parquet(lineage_path)
 
     new_rows = lineage.agg(F.sum("row_count")).collect()[0][0] or 0

@@ -56,9 +56,8 @@ def q_exact_dedup(spark, sf_dir):
     ``min(doc_id)`` — a HashAggregate with map-side partial aggregation
     replaces the window sort (guide §2.3 "aggregate before you shuffle";
     a viral duplicate combines per-mapper instead of sorting one hot
-    partition — the ``mark_duplicates_multi`` rationale). Identical
-    output; the full-row survivors path stays
-    :func:`operators.dedup.exact_dedup`."""
+    partition — the :func:`operators.dedup.mark_duplicates_incremental`
+    rationale). Identical output."""
     return (_docs(spark, sf_dir)
             .groupBy(F.sha2(F.col("text"), 256).alias("sha256_key"))
             .agg(F.min("doc_id").alias("doc_id"))

@@ -43,7 +43,7 @@ def process_batch(batch_df: DataFrame, batch_id: int, extracted_path: str,
     under re-execution (module-level so idempotence is testable without a
     streaming harness)."""
     from ..operators.extract import extract_pages
-    from ..plans.pipeline import bucket_col
+    from ..plans.pipeline import bucket_col, lineage_rows
 
     spark = batch_df.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -57,14 +57,8 @@ def process_batch(batch_df: DataFrame, batch_id: int, extracted_path: str,
     try:
         extracted.write.mode("overwrite") \
             .partitionBy("batch_id", "bucket").parquet(extracted_path)
-        lineage = (extracted.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
-            .alias("error_count"),
-            F.sum(F.crc32(F.concat_ws("|", "url", "sha256")))
-            .alias("checksum"))
+        lineage = lineage_rows(extracted) \
             .withColumn("batch_id", F.lit(batch_id))
-            .withColumn("committed_at", F.current_timestamp()))
         lineage.write.mode("overwrite").partitionBy("batch_id") \
             .parquet(lineage_path)
     finally:

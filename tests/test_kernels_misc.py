@@ -129,6 +129,21 @@ def test_simhash_similar_texts_close():
     assert d_sim < d_diff
 
 
+def test_word_cache_skips_long_tokens():
+    """Tokens over 64 characters are hashed but not cached (base64 runs
+    and urls are near-unique and would fill the cache); the hash is the
+    plain md5-derived value either way."""
+    long_tok = "x" * 65
+    hashing._WORD_CACHE.pop(long_tok, None)
+    n = len(hashing._WORD_CACHE)
+    assert hashing.word_hash64(long_tok) == hashing._hash64(long_tok)
+    assert len(hashing._WORD_CACHE) == n
+    short_tok = "y" * 64
+    hashing._WORD_CACHE.pop(short_tok, None)
+    assert hashing.word_hash64(short_tok) == hashing._hash64(short_tok)
+    assert hashing._WORD_CACHE.get(short_tok) == hashing._hash64(short_tok)
+
+
 def test_sha256_matches_stdlib():
     import hashlib as h
     assert hashing.sha256_hex("abc") == h.sha256(b"abc").hexdigest()

@@ -329,3 +329,33 @@ def test_minhash_neardup_incremental_cross_run(spark, tmp_path):
                                            threshold=0.7)
     assert {r["doc_id"] for r in sidx.collect()} == {"a1", "b2"}
     unpersist_input(sm)
+
+
+def test_minhash_index_band_fmt_stamp(spark):
+    """The signature index names its band key format; an index written
+    in another format (or before the stamp existed — the md5 band keys)
+    would join against nothing and pass every near-dup, so it is refused
+    with a rebuild error instead of silently accepted."""
+    from pubscience_spark.operators.dedup import (
+        minhash_neardup_incremental, unpersist_input)
+
+    text = ("the optimizer chooses join strategies from statistics "
+            "collected while scanning the parquet files of the corpus ")
+    run1 = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    m1, idx = minhash_neardup_incremental(run1, "doc_id", threshold=0.7)
+    unpersist_input(m1)
+    run2 = spark.createDataFrame([(2, text + "extra tail words ")],
+                                 "doc_id long, text string")
+    with pytest.raises(ValueError, match="band_fmt.*rebuild"):
+        minhash_neardup_incremental(run2, "doc_id", threshold=0.7,
+                                    index_df=idx.drop("band_fmt"))
+    with pytest.raises(ValueError, match="band_fmt='md5'.*rebuild"):
+        minhash_neardup_incremental(
+            run2, "doc_id", threshold=0.7,
+            index_df=idx.withColumn("band_fmt", F.lit("md5")))
+    # the stamped index is accepted and matches the near-copy
+    assert {r["band_fmt"] for r in idx.collect()} == {H.BAND_FMT}
+    m2, _ = minhash_neardup_incremental(run2, "doc_id", threshold=0.7,
+                                        index_df=idx)
+    assert [r["is_neardup"] for r in m2.collect()] == [True]
+    unpersist_input(m2)

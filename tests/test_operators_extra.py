@@ -197,7 +197,8 @@ def _para_dedup_brute(docs, sep="\n\n", min_chars=30, normalize=True):
 
 
 def test_paragraph_dedup_equals_bruteforce(spark):
-    from pubscience_spark.operators.dedup import paragraph_dedup
+    from pubscience_spark.operators.dedup import (
+        paragraph_dedup_incremental, unpersist_input)
     footer = "This website uses cookies to improve your experience."
     docs = {
         1: "A unique opening paragraph with enough length here.\n\n"
@@ -209,8 +210,9 @@ def test_paragraph_dedup_equals_bruteforce(spark):
            "Final doc text, long enough to be a dedup key candidate.",
     }
     df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
-    got = {r["doc_id"]: r["text"]
-           for r in paragraph_dedup(df, min_chars=30).collect()}
+    out, _ = paragraph_dedup_incremental(df, min_chars=30)
+    got = {r["doc_id"]: r["text"] for r in out.collect()}
+    unpersist_input(out)
     assert got == _para_dedup_brute(docs)
     # the normalized footer variant in doc 3 was dropped too
     assert "COOKIES" not in got[3]
@@ -223,7 +225,8 @@ def test_paragraph_dedup_viral_key_salted(spark):
     salted winner join exists for): results equal brute force at the
     default salt and at salt=1, and the salted plan replicates the
     winner side across shards (explode of the salt sequence)."""
-    from pubscience_spark.operators.dedup import paragraph_dedup
+    from pubscience_spark.operators.dedup import (
+        paragraph_dedup_incremental, unpersist_input)
     footer = ("This exact viral cookie banner appears on half of all "
               "pages in the corpus, verbatim.")
     docs = {}
@@ -235,36 +238,43 @@ def test_paragraph_dedup_viral_key_salted(spark):
                                "doc_id long, text string")
     want = _para_dedup_brute(docs)
     for s in (8, 1):
-        got = {r["doc_id"]: r["text"]
-               for r in paragraph_dedup(df, min_chars=30,
-                                        salt=s).collect()}
+        out, _ = paragraph_dedup_incremental(df, min_chars=30, salt=s)
+        got = {r["doc_id"]: r["text"] for r in out.collect()}
+        unpersist_input(out)
         assert got == want, f"salt={s}"
-    plan = paragraph_dedup(df, salt=8) \
-        ._jdf.queryExecution().executedPlan().toString()
+    out, _ = paragraph_dedup_incremental(df, salt=8)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    unpersist_input(out)
     assert "explode" in plan.lower()            # winner-side replication
 
 
 def test_paragraph_dedup_counters_and_empty_doc(spark):
-    from pubscience_spark.operators.dedup import paragraph_dedup
+    from pubscience_spark.operators.dedup import (
+        paragraph_dedup_incremental, unpersist_input)
     long_p = "Repeated paragraph long enough to key on, clearly."
     df = spark.createDataFrame(
         [(1, long_p), (2, long_p), (3, long_p + "\n\n" + long_p)],
         "doc_id long, text string")
-    out = {r["doc_id"]: r for r in paragraph_dedup(df).collect()}
+    result, _ = paragraph_dedup_incremental(df)
+    out = {r["doc_id"]: r for r in result.collect()}
     assert out[1]["text"] == long_p
     assert out[1]["n_paras_kept"] == 1 and out[1]["n_paras_dropped"] == 0
     # docs 2 and 3 lose everything -> empty text, counters add up
     assert out[2]["text"] == "" and out[2]["n_paras_dropped"] == 1
     assert out[3]["text"] == "" and out[3]["n_paras_dropped"] == 2
-    n = paragraph_dedup(df).count()
+    n = result.count()
+    unpersist_input(result)
     assert n == 3                               # every doc row survives
 
 
 def test_paragraph_dedup_plan_is_native(spark):
     """No Python stages: explode/hash/agg/join/reassemble are all JVM."""
-    from pubscience_spark.operators.dedup import paragraph_dedup
+    from pubscience_spark.operators.dedup import (
+        paragraph_dedup_incremental, unpersist_input)
     df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    plan = paragraph_dedup(df)._jdf.queryExecution().executedPlan().toString()
+    out, _ = paragraph_dedup_incremental(df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    unpersist_input(out)
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
     assert "BatchEvalPython" not in plan
 
@@ -279,22 +289,20 @@ def test_paragraph_dedup_incremental_cross_run(spark, tmp_path):
     import pytest
 
     from pubscience_spark.operators.dedup import (
-        load_paragraph_index, paragraph_dedup,
-        paragraph_dedup_incremental, unpersist_input)
+        load_paragraph_index, paragraph_dedup_incremental, unpersist_input)
 
     footer = "This website uses cookies to improve your experience."
-    run1 = spark.createDataFrame(
-        [(1, "A unique opening paragraph with enough length here.\n\n"
-             + footer),
-         (2, footer + "\n\nSecond document's own long paragraph "
-                      "that is not repeated anywhere else.")],
-        "doc_id long, text string")
-    # no index: result identical to plain paragraph_dedup
+    docs1 = {1: "A unique opening paragraph with enough length here.\n\n"
+                + footer,
+             2: footer + "\n\nSecond document's own long paragraph "
+                         "that is not repeated anywhere else."}
+    run1 = spark.createDataFrame(list(docs1.items()),
+                                 "doc_id long, text string")
+    # no index: within-run dedup, equal to the brute-force oracle
     out1, idx1 = paragraph_dedup_incremental(run1, min_chars=30)
-    plain = {r["doc_id"]: r["text"]
-             for r in paragraph_dedup(run1, min_chars=30).collect()}
     got1 = {r["doc_id"]: r["text"] for r in out1.collect()}
-    assert got1 == plain and footer in got1[1] and footer not in got1[2]
+    assert got1 == _para_dedup_brute(docs1)
+    assert footer in got1[1] and footer not in got1[2]
     ipath = os.path.join(str(tmp_path), "para_index")
     idx1.write.mode("append").parquet(ipath)
     unpersist_input(out1)

@@ -26,12 +26,6 @@ def test_native_sha2_matches_python(spark, docs):
     assert row["h"] == hashlib.sha256(row["text"].encode()).hexdigest()
 
 
-def test_exact_dedup_keeps_first(spark, docs):
-    out = dedup_ops.exact_dedup(docs, "text", "doc_id")
-    assert out.count() == 7  # 7 distinct texts
-    assert {r["doc_id"] for r in out.collect()} == set(range(7))
-
-
 def test_minhash_finds_planted_neardups(spark):
     base = " ".join(f"tok{i}" for i in range(120))
     near = base.replace("tok5 ", "tok5x ")
@@ -135,10 +129,3 @@ def test_broadcast_join_in_star_query(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_exact_dedup_single_shuffle(spark, docs):
-    out = dedup_ops.exact_dedup(docs, "text", "doc_id")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # one exchange for the window partitioning, nothing else
-    assert plan.count("Exchange hashpartitioning") == 1

@@ -121,21 +121,21 @@ def test_mark_duplicates_multi_map_column_named_error(spark):
     """A map-typed non-key column cannot be collapsed via min(struct)
     — the operator must raise a NAMED error at build time, not an
     opaque analysis failure (ADVICE r8)."""
-    from pubscience_spark.operators.dedup import mark_duplicates_multi
+    from pubscience_spark.operators.dedup import mark_duplicates_incremental
     df = spark.createDataFrame(
         [("u1", "k1", {"a": 1})],
         "url string, key string, props map<string,int>")
     with pytest.raises(ValueError, match="not orderable"):
-        mark_duplicates_multi(df, ["key"], "url")
+        mark_duplicates_incremental(df, ["key"], "url")
 
 
 def test_mark_duplicates_multi_plain_columns_unaffected(spark):
-    from pubscience_spark.operators.dedup import (mark_duplicates_multi,
-                                                  unpersist_input)
+    from pubscience_spark.operators.dedup import (
+        mark_duplicates_incremental, unpersist_input)
     df = spark.createDataFrame(
         [("u1", "k1", "b1"), ("u2", "k1", "b2"), ("u1", "k1", "b1")],
         "url string, key string, body string")
-    out = mark_duplicates_multi(df, ["key"], "url")
+    out, _ = mark_duplicates_incremental(df, ["key"], "url")
     rows = {(r["url"], r["is_duplicate"]) for r in out.collect()}
     assert rows == {("u1", False), ("u2", True)}
     unpersist_input(out)

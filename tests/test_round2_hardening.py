@@ -19,7 +19,8 @@ def test_mark_duplicates_multi_persists_internally(spark):
         (F.col("id") % 7).cast("string").alias("sha256"),
         (F.col("id") % 13).cast("string").alias("dedup_key"))
     assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
-    marked = dedup.mark_duplicates_multi(df, ["sha256", "dedup_key"], "url")
+    marked, _ = dedup.mark_duplicates_incremental(
+        df, ["sha256", "dedup_key"], "url")
     plan = marked._jdf.queryExecution().executedPlan().toString()
     # both consumers (slim keys side and wide join side) must read the
     # cache — a missing InMemoryTableScan means upstream re-executes per
@@ -33,7 +34,7 @@ def test_mark_duplicates_multi_persists_internally(spark):
     # and the caller's own cache survives
     df2 = df.persist()
     df2.count()
-    marked2 = dedup.mark_duplicates_multi(df2, ["sha256"], "url")
+    marked2, _ = dedup.mark_duplicates_incremental(df2, ["sha256"], "url")
     assert dedup.unpersist_input(marked2) is False
     assert df2.storageLevel.useMemory or df2.storageLevel.useDisk
     df2.unpersist()
@@ -229,7 +230,7 @@ def test_mark_duplicates_repeated_order_col(spark):
             ("u3", "D", "kD", 50), ("u4", "D", "kD", 60)]  # (c)
     df = spark.createDataFrame(
         rows, "url string, sha256 string, dedup_key string, extra int")
-    marked = dedup.mark_duplicates_multi(
+    marked, idx = dedup.mark_duplicates_incremental(
         df, ["sha256", "dedup_key"], "url")
     got = {(r["url"], r["sha256"]): (r["is_duplicate"], r["extra"])
            for r in marked.collect()}
@@ -239,17 +240,7 @@ def test_mark_duplicates_repeated_order_col(spark):
     assert got[("u2", "C")] == (False, 30)         # deterministic min
     assert got[("u3", "D")][0] is False
     assert got[("u4", "D")][0] is True
-    dedup.unpersist_input(marked)
-
-    # incremental variant: same semantics, plus the keeper index
-    marked2, idx = dedup.mark_duplicates_incremental(
-        df, ["sha256", "dedup_key"], "url")
-    got2 = {(r["url"], r["sha256"]): r["is_duplicate"]
-            for r in marked2.collect()}
-    assert marked2.count() == 5
-    assert got2[("u4", "D")] is True
-    assert sum(1 for v in got2.values() if not v) == 4
     # the index holds one keeper per distinct key value
     assert (idx.where("key_name = 'sha256'").count()
             == df.select("sha256").distinct().count())
-    dedup.unpersist_input(marked2)
+    dedup.unpersist_input(marked)

@@ -262,6 +262,39 @@ def test_run_incremental_delta_only_and_idempotent(spark, tmp_path):
         == spark.read.parquet(str(in_dir)).select("url").distinct().count()
 
 
+def test_run_incremental_lineage_matches_batch_layout(spark, tmp_path):
+    """Streaming writes the batch lineage layout plus ``batch_id``
+    (``dup_count`` NULL: streaming marks no duplicates), so the lineage
+    audit passes on a streaming out_dir and flags a deleted data file."""
+    import sys
+
+    from pubscience_spark.datagen.pages import write_pages_parquet
+    from pubscience_spark.plans.pipeline import run_extraction
+    from pubscience_spark.streaming.extract_stream import run_incremental
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..",
+                                    "tools"))
+    import audit_lineage
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    write_pages_parquet(str(in_dir / "a.parquet"), 30, seed=11)
+    out = str(tmp_path / "out")
+    r = run_incremental(spark, str(in_dir), out, n_buckets=4)
+    batch = run_extraction(spark, spark.read.parquet(str(in_dir)),
+                           str(tmp_path / "batch"), n_buckets=4)
+    batch_cols = spark.read.parquet(batch["lineage_path"]).columns
+    lineage = spark.read.parquet(r["lineage_path"])
+    assert lineage.columns == batch_cols + ["batch_id"]
+    assert lineage.where(F.col("dup_count").isNotNull()).count() == 0
+    assert audit_lineage.audit(spark, out) == []
+    victim = next(os.path.join(root, f)
+                  for root, _d, files in os.walk(r["extracted_path"])
+                  for f in files if f.endswith(".parquet"))
+    os.remove(victim)
+    assert audit_lineage.audit(spark, out) != []
+
+
 def test_run_incremental_corrupt_lineage_raises(spark, tmp_path):
     """An unreadable lineage log is a read failure, not "no batches
     committed yet": reading it as empty would make the curated run

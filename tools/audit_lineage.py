@@ -18,11 +18,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def audit(spark, out_dir: str) -> list[str]:
     from pyspark.sql import functions as F
+
+    from pubscience_spark.plans.pipeline import lineage_checksum
     extracted = spark.read.parquet(os.path.join(out_dir, "extracted"))
     lineage = spark.read.parquet(os.path.join(out_dir, "lineage"))
     actual = extracted.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("a_rows"),
-        F.sum(F.crc32(F.concat_ws("|", "url", "sha256"))).alias("a_sum"))
+        lineage_checksum().alias("a_sum"))
     expected = lineage.groupBy("bucket").agg(
         F.sum("row_count").alias("e_rows"), F.sum("checksum").alias("e_sum"))
     joined = actual.join(expected, "bucket", "full").collect()

@@ -36,7 +36,7 @@ def main() -> None:
     from pubscience_spark.plans.pipeline import bucket_col
     from pubscience_spark.session import get_spark
 
-    spark = get_spark(master="local[4]", shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     sections: list[tuple[str, str, str]] = []
@@ -44,7 +44,7 @@ def main() -> None:
     # 1. extraction core
     pages = spark.createDataFrame(
         [("u", bytearray(b"<html></html>"))], "url string, html binary")
-    core = dedup_ops.mark_duplicates_multi(
+    core, _ = dedup_ops.mark_duplicates_incremental(
         extract_pages(pages.withColumn("bucket", bucket_col(8))
                       .repartition(8, "bucket").select("url", "html")),
         ["sha256", "dedup_key"], "url")
