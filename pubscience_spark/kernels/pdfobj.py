@@ -1104,7 +1104,7 @@ def _content_text(body: bytes, fonts: dict[str, FontDecoder]) -> str:
     Real PDFs emit MANY show operators per visual line (LaTeX kerns every
     few glyphs), so joining every Tj with ``\\n`` would put fragments of
     one line on separate lines — and the downstream P6 cleanup
-    (``pdfmini.text_extractor``) scrubs by LINE (digit-start drops,
+    (``pdfmini.text_extractor``) scrubs by LINE (digit-newline strips,
     number-only-line drops), so line fidelity is semantic, not cosmetic.
     Line breaks follow the text-positioning operators the way
     pypdf/pdfminer approximate them: ``Td/TD`` with a vertical move,

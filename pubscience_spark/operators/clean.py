@@ -92,6 +92,11 @@ def prefix_dedup_key_udf(s: pd.Series) -> pd.Series:
                  if t is not None else None)
 
 
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: ``\\`` and ``'`` doubled."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
 def with_detected_lang(df, text_col: str = "text", out_col: str = "detected",
                        sample_size: int = 10000, margin: float = 0.08):
     """F8 detector as NATIVE Catalyst expressions — the same arithmetic as
@@ -146,17 +151,13 @@ def with_detected_lang(df, text_col: str = "text", out_col: str = "detected",
         # (0.5D/10.0D keep the literals DOUBLE, int/int division is
         # double in both forms).
         alt = "|".join(_re.escape(w) for w in sorted(stop))
-        if "'" in alt or "\\" in alt or any(
-                "'" in g or "\\" in g for g in grams):
-            raise ValueError(
-                f"langid profile for {lang!r} contains SQL-literal-unsafe "
-                "characters — extend the expr builder's escaping first")
+        stop_re = _sql_str(f"(?= ({alt}) )")
         gram_terms = " + ".join(
             f"(length({padded_col}) - length(replace({padded_col}, "
-            f"'{g}', ''))) / {len(g)}" for g in grams)
+            f"{_sql_str(g)}, ''))) / {len(g)}" for g in grams)
         score_cols[f"__lid_s_{lang}"] = F.expr(
             f"CASE WHEN size({words_col}) > 0 THEN "
-            f"regexp_count({padded_col}, '(?= ({alt}) )')"
+            f"regexp_count({padded_col}, {stop_re})"
             f" / size({words_col})"
             f" + 0.5D * (({gram_terms}) / {nchars_col}) * 10.0D "
             f"ELSE 0.0D END")

@@ -25,12 +25,12 @@ def spread(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     projection. Only spread SLIM projections; the shuffle moves
     whatever columns the frame carries.
 
-    The probe result is MEMOIZED per (session, analyzed-plan semantic
-    hash, input file list, target): ``df.rdd`` pays a full physical
+    The probe result is MEMOIZED per (application id, analyzed-plan
+    semantic hash, input file list, target): ``df.rdd`` pays a full physical
     planning + RDD conversion round-trip (~40-800 ms of driver time,
     round-8 measurement) and repeated invocations of the same query
     re-probe an identical frame every time. Same logical plan over the
-    same files in the same session splits identically, so the cached
+    same files in the same application splits identically, so the cached
     count is exact. (A file overwritten in-place with a different size
     mid-session would go stale — inputs here are immutable runs.)
     """
@@ -39,7 +39,10 @@ def spread(df: DataFrame, min_ratio: float = 0.5) -> DataFrame:
     thresh = max(1, int(target * min_ratio))
     key = None
     try:
-        key = (id(sess), df._jdf.queryExecution().analyzed().semanticHash(),
+        # the application id, not id(sess): a new session can reuse a
+        # stopped one's address, but never its application id
+        key = (sess.sparkContext.applicationId,
+               df._jdf.queryExecution().analyzed().semanticHash(),
                tuple(df.inputFiles()), target)
     except Exception:
         pass

@@ -149,6 +149,27 @@ def test_detect_lang_expr_matches_kernel(spark):
         assert got[i] == detect_lang(t), (i, t[:40], got[i], detect_lang(t))
 
 
+def test_detect_lang_expr_escapes_sql_literals(spark, monkeypatch):
+    """A profile entry holding ``'`` or ``\\`` is escaped into the SQL
+    literals (it used to raise ValueError) and still scores like the
+    kernel."""
+    from pubscience_spark.kernels import langid
+    from pubscience_spark.kernels.langid import detect_lang
+    from pubscience_spark.operators.clean import with_detected_lang
+    stop, grams = langid._PROFILES["fr"]
+    monkeypatch.setitem(langid._PROFILES, "fr", (
+        stop | {"l'étude", "aujourd'hui", "a\\b"}, grams + ("d'", "\\n")))
+    texts = ["le patient a été traité et les résultats de l'étude",
+             "the quick brown fox is one of the many animals",
+             "aujourd'hui c'est le jour de la semaine",
+             "back\\slash a\\b \\n d'x", ""]
+    df = spark.createDataFrame(list(enumerate(texts)), ["i", "text"])
+    got = {r["i"]: r["d"] for r in
+           with_detected_lang(df, "text", "d").select("i", "d").collect()}
+    assert got == {i: detect_lang(t) for i, t in enumerate(texts)}
+    assert got[0] == "fr" and got[1] == "en"
+
+
 def test_rows_only_queries_golden_counts(spark):
     """Golden aggregate counts for the rows-only (non-SQL) battery tier at
     sf0.001 — catches silent semantic drift where the driver's rows-only
@@ -190,6 +211,48 @@ def test_round2_operators_on_degenerate_inputs(spark, tmp_path):
     import os
     m = curate_corpus(spark, empty, os.path.join(str(tmp_path), "c0"))
     assert m["input"] == 0 and m["written"] == 0 and m["splits"] == {}
+
+
+def test_spread_memo_not_read_across_applications(monkeypatch):
+    """``spread``'s partition-count memo is keyed on the application id:
+    a session that takes over a stopped session's Python object (and so
+    its ``id()``) must probe again, not read the stopped one's count."""
+    from types import SimpleNamespace
+
+    from pubscience_spark.operators import util
+
+    probes = []
+
+    class _Frame:
+        def __init__(self, sess, n_parts):
+            self.sparkSession = sess
+            self._n = n_parts
+            plan = SimpleNamespace(semanticHash=lambda: 7)
+            qe = SimpleNamespace(analyzed=lambda: plan)
+            self._jdf = SimpleNamespace(queryExecution=lambda: qe)
+
+        def inputFiles(self):
+            return ["/data/part-0.parquet"]
+
+        @property
+        def rdd(self):
+            probes.append(self._n)
+            return SimpleNamespace(getNumPartitions=lambda: self._n)
+
+        def repartition(self, n):
+            return ("repartitioned", n)
+
+    monkeypatch.setattr(util, "_SPREAD_MEMO", {})
+    sess = SimpleNamespace(sparkContext=SimpleNamespace(
+        applicationId="local-1", defaultParallelism=8))
+    old = _Frame(sess, 1)
+    assert util.spread(old) == ("repartitioned", 8)
+    assert util.spread(old) == ("repartitioned", 8) and probes == [1]
+    # the application stops; a new one comes up in the same object
+    sess.sparkContext.applicationId = "local-2"
+    new = _Frame(sess, 8)
+    assert util.spread(new) is new
+    assert probes == [1, 8]
 
 
 def test_fsutil_hadoop_fs_roundtrip(spark, tmp_path):
