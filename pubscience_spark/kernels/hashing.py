@@ -32,10 +32,6 @@ def word_shingles(text: str, k: int = 3) -> set[str]:
     return {" ".join(words[i:i + k]) for i in range(len(words) - k + 1)}
 
 
-def _hash32(s: str) -> int:
-    return struct.unpack("<I", hashlib.md5(s.encode("utf-8")).digest()[:4])[0]
-
-
 def _hash64(s: str) -> int:
     return struct.unpack("<Q", hashlib.md5(s.encode("utf-8")).digest()[:8])[0]
 

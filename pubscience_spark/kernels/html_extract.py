@@ -16,6 +16,8 @@ regex pulls:
   LINK_DENSITY_MAX is boilerplate unless it is long enough to be prose
 - citation scrub ``[12]`` (cf. ``nice/src/index.ts:122``) happens later in
   :func:`pubscience_spark.kernels.textclean.clean_markdown` (H7)
+- images contribute no text and tables are dropped (B5 analog); other
+  containers (blockquote, pre, figure, …) emit their text as paragraphs
 
 Output is a plain dict so the Arrow UDF wrapper can build a struct column.
 Everything is deterministic pure Python — the byte-identical contract.
@@ -51,22 +53,16 @@ STOP_HEADINGS = (
 
 HEADING_TAGS = {"h1": "#", "h2": "##", "h3": "###", "h4": "####",
                 "h5": "####", "h6": "####"}
-BLOCK_TAGS = frozenset({"p", "div", "section", "article", "main", "body",
-                        "ul", "ol", "table", "blockquote", "pre", "figure",
-                        "figcaption", "tr"})
 
 LINK_DENSITY_MAX = 0.5     # anchor-char share above which a block is navigation
 MIN_PROSE_CHARS = 80       # long blocks survive high link density (prose w/ cites)
 
-_WS = re.compile(r"\s+")
-
 
 class _Node:
-    __slots__ = ("tag", "attrs", "children", "parent", "skip")
+    __slots__ = ("tag", "children", "parent", "skip")
 
-    def __init__(self, tag, attrs, parent, skip):
+    def __init__(self, tag, parent, skip):
         self.tag = tag
-        self.attrs = attrs
         self.children = []      # _Node or str
         self.parent = parent
         self.skip = skip
@@ -99,7 +95,7 @@ class _TreeBuilder(HTMLParser):
 
     def __init__(self):
         super().__init__(convert_charrefs=True)
-        self.root = _Node("__root__", {}, None, False)
+        self.root = _Node("__root__", None, False)
         self.cur = self.root
         self.meta: list[dict] = []
         self.title_parts: list[str] = []
@@ -120,12 +116,6 @@ class _TreeBuilder(HTMLParser):
                 self.meta.append(dict(attrs))
             elif tag == "br" and not self._suppress:
                 self.cur.children.append("\n")
-            elif tag == "img" and not self._suppress \
-                    and self._depth < MAX_DOM_DEPTH:
-                # childless node so extended mode can render ![alt](src);
-                # contributes no text in default mode (no children)
-                self.cur.children.append(
-                    _Node("img", dict(attrs), self.cur, self.cur.skip))
             return
         if tag == "title":
             self._in_title = True
@@ -136,10 +126,9 @@ class _TreeBuilder(HTMLParser):
             if starts_skip:
                 self._suppress += 1
             return
-        attrs_d = dict(attrs)
         skip = (self.cur.skip or tag in SKIP_TAGS
-                or _is_boilerplate_attrs(attrs_d))
-        node = _Node(tag, attrs_d, self.cur, skip)
+                or _is_boilerplate_attrs(dict(attrs)))
+        node = _Node(tag, self.cur, skip)
         self.cur.children.append(node)
         self.cur = node
         self._depth += 1
@@ -209,65 +198,18 @@ def _node_text(node) -> tuple[str, int]:
 
 
 def _norm(s: str) -> str:
-    # ≡ _WS.sub(" ", s).strip(): str.split()'s whitespace set equals
+    # ≡ re.sub(r"\s+", " ", s).strip(): str.split()'s whitespace set equals
     # regex \s (verified across the BMP in tests) and join/split skips
     # the regex machinery — _norm runs tens of times per document
     return " ".join(s.split())
 
 
-_INLINE_WRAP = {"strong": "**", "b": "**", "em": "*", "i": "*", "code": "`"}
-
-
-def _inline_md(node) -> tuple[str, int]:
-    """H6 extended mode: markdownify-parity inline rendering — links become
-    ``[text](href)``, strong/em/code wrap; anchor chars still counted for
-    the link-density gate."""
-    if isinstance(node, str):
-        return node, 0
-    parts, anchor = [], 0
-    for ch in node.children:
-        t, a = _inline_md(ch)
-        parts.append(t)
-        anchor += a
-    inner = "".join(parts)
-    if node.tag == "img":
-        src = node.attrs.get("src") or ""
-        alt = _WS.sub(" ", node.attrs.get("alt") or "").strip()
-        title = node.attrs.get("title")
-        if src:
-            t = f' "{title}"' if title else ""
-            return f"![{alt}]({src}{t})", 0
-        return "", 0
-    if node.tag == "a":
-        href = node.attrs.get("href")
-        label = _WS.sub(" ", inner).strip()
-        anchor = len(label)
-        if href and label:
-            return f"[{label}]({href})", anchor
-        return inner, anchor
-    wrap = _INLINE_WRAP.get(node.tag)
-    if wrap and _WS.sub("", inner):
-        return f"{wrap}{inner.strip()}{wrap}", anchor
-    return inner, anchor
-
-
 class _Emitter:
-    """Walks the tree emitting markdown-ish blocks with link-density gating.
+    """Walks the tree emitting markdown-ish blocks with link-density gating."""
 
-    ``extended`` (H6 markdownify parity, opt-in — the default byte
-    semantics stay frozen-fixture-stable) adds inline links/strong/em/code,
-    nested-list indentation, blockquote ``> `` prefixes and fenced ``pre``
-    blocks, mirroring the reference's markdownify defaults
-    (scripts/scrapers/scrapers.py)."""
-
-    def __init__(self, extended: bool = False):
+    def __init__(self):
         self.blocks: list[tuple[str, str]] = []   # (kind, text)
         self.stopped = False
-        self.extended = extended
-        self._list_depth = 0
-
-    def _text(self, node) -> tuple[str, int]:
-        return _inline_md(node) if self.extended else _node_text(node)
 
     def walk(self, node: _Node):
         if self.stopped:
@@ -290,15 +232,6 @@ class _Emitter:
                 if not node.skip:
                     buf.append(ch)
                 continue
-            if ch.tag == "img":
-                # invisible in default mode (no flush — keeps surrounding
-                # bare text one paragraph, byte-stable); inline markdown
-                # in extended mode, like markdownify
-                if self.extended and not ch.skip and not node.skip:
-                    t, _ = _inline_md(ch)
-                    if t:
-                        buf.append(" " + t + " ")
-                continue
             flush()
             if ch.skip:
                 continue
@@ -311,89 +244,22 @@ class _Emitter:
                     self.stopped = True
                     return
                 self.blocks.append(("heading:" + HEADING_TAGS[tag], text))
-            elif tag == "li":
-                sublists = []
-                if self.extended:
-                    # nested lists render as their own indented items, not
-                    # flattened into the parent item's text
-                    sublists = [c for c in ch.children
-                                if not isinstance(c, str)
-                                and c.tag in ("ul", "ol") and not c.skip]
-                    inline = _Node(ch.tag, ch.attrs, ch.parent, ch.skip)
-                    inline.children = [c for c in ch.children
-                                       if c not in sublists]
-                    text, anchor = self._text(inline)
-                else:
-                    text, anchor = self._text(ch)
+            elif tag in ("li", "p"):
+                text, anchor = _node_text(ch)
                 text = _norm(text)
                 if text and not self._is_navlike(text, anchor):
-                    depth = max(0, self._list_depth - 1) if self.extended \
-                        else 0
-                    self.blocks.append(("li:" + "  " * depth, text))
-                for sub in sublists:
-                    wrapper = _Node("__wrap__", {}, None, False)
-                    wrapper.children = [sub]
-                    self.walk(wrapper)
-            elif tag == "p":
-                text, anchor = self._text(ch)
-                text = _norm(text)
-                if text and not self._is_navlike(text, anchor):
-                    self.blocks.append(("p", text))
+                    self.blocks.append((tag, text))
             elif tag in ("ul", "ol"):
                 # gate the whole list by aggregate link density (menus die here)
                 text, anchor = _node_text(ch)
                 if self._is_navlike(_norm(text), anchor):
                     continue
-                self._list_depth += 1
                 self.walk(ch)
-                self._list_depth -= 1
-            elif self.extended and tag == "blockquote":
-                text, anchor = self._text(ch)
-                text = _norm(text)
-                if text and not self._is_navlike(text, anchor):
-                    self.blocks.append(("quote", text))
-            elif self.extended and tag == "pre":
-                raw = _node_text(ch)[0].strip("\n")
-                if raw.strip():
-                    self.blocks.append(("pre", raw))
-            elif tag in ("table",):
-                if self.extended:
-                    md = self._table_md(ch)
-                    if md:
-                        self.blocks.append(("table", md))
-                continue  # default mode: tables removed (B5 analog)
+            elif tag == "table":
+                continue  # tables removed (B5 analog)
             else:
                 self.walk(ch)
         flush()
-
-    def _table_md(self, table: _Node) -> str:
-        """Markdownify-parity pipe table (H6 extended): first row is the
-        header, ``| --- |`` separator after it, cells inline-rendered with
-        ``|`` escaped. Matches markdownify's default table converter shape
-        (scripts/scrapers/scrapers.py:340 uses plain
-        ``markdownify.markdownify``)."""
-        def rows_of(node):
-            out = []
-            for ch in node.children:
-                if isinstance(ch, str) or ch.skip:
-                    continue
-                if ch.tag == "tr":
-                    out.append(ch)
-                elif ch.tag in ("thead", "tbody", "tfoot"):
-                    out.extend(rows_of(ch))
-            return out
-
-        lines: list[str] = []
-        for i, tr in enumerate(rows_of(table)):
-            cells = [c for c in tr.children
-                     if not isinstance(c, str) and not c.skip
-                     and c.tag in ("td", "th")]
-            rendered = [_norm(self._text(c)[0]).replace("|", r"\|")
-                        for c in cells]
-            lines.append("| " + " | ".join(rendered) + " |")
-            if i == 0:
-                lines.append("| " + " | ".join("---" for _ in cells) + " |")
-        return "\n".join(lines) if len(lines) > 2 else ""
 
     @staticmethod
     def _is_navlike(text: str, anchor_chars: int) -> bool:
@@ -614,13 +480,11 @@ def _fast_parse(tb: "_TreeBuilder", rawdata: str) -> bool:
     return True
 
 
-def extract_html(html: str, extended: bool = False) -> dict:
+def extract_html(html: str) -> dict:
     """Extract main content + metadata from an HTML document.
 
     Returns dict with keys: extracted_text, title, abstract, authors,
     headings, spans (list of (start, end, kind, text) over extracted_text).
-    ``extended`` opts into markdownify-parity rendering (H6) — the default
-    output stays byte-stable for the frozen fixtures.
     """
     tb = _TreeBuilder()
     try:
@@ -649,7 +513,7 @@ def extract_html(html: str, extended: bool = False) -> dict:
                       "dc.description") and abstract is None:
             abstract = _norm(content)
 
-    em = _Emitter(extended=extended)
+    em = _Emitter()
     em.walk(tb.root)
 
     parts: list[str] = []
@@ -663,19 +527,9 @@ def extract_html(html: str, extended: bool = False) -> dict:
             span_kind = "heading"
             if first_heading is None:
                 first_heading = text
-        elif kind.startswith("li"):
-            indent = kind.split(":", 1)[1] if ":" in kind else ""
-            rendered = f"{indent}- {text}"
+        elif kind == "li":
+            rendered = f"- {text}"
             span_kind = "list_item"
-        elif kind == "quote":
-            rendered = f"> {text}"
-            span_kind = "quote"
-        elif kind == "pre":
-            rendered = f"```\n{text}\n```"
-            span_kind = "code"
-        elif kind == "table":
-            rendered = text          # pre-rendered pipe rows
-            span_kind = "table"
         else:
             rendered = text
             span_kind = "paragraph"
@@ -704,10 +558,10 @@ def extract_html(html: str, extended: bool = False) -> dict:
     }
 
 
-def extract_html_bytes(raw: bytes, extended: bool = False) -> dict:
+def extract_html_bytes(raw: bytes) -> dict:
     """Decode (utf-8, latin-1 fallback) then extract."""
     try:
         html = raw.decode("utf-8")
     except UnicodeDecodeError:
         html = raw.decode("latin-1")
-    return extract_html(html, extended=extended)
+    return extract_html(html)

@@ -20,10 +20,6 @@ STOPWORDS_EN = frozenset("""the and of to in is that it for on with as are
     which their has will each about how""".split())
 
 
-def word_count(text: str) -> int:
-    return len(_RE_WORD.findall(text))
-
-
 def token_count(text: str) -> int:
     """BPE-ish pre-tokenizer count: letter runs, digit runs, single punct."""
     return len(_RE_TOKEN.findall(text))

@@ -30,10 +30,6 @@ _RE_TOKEN = re.compile(
     r"\\([a-z]{1,32})(-?\d{1,10})? ?|\\'([0-9a-fA-F]{2})|\\([^a-z])|([{}])")
 
 
-def is_rtf(raw: bytes) -> bool:
-    return raw[:5] == b"{\\rtf"
-
-
 def rtf_to_text(rtf: str) -> str:
     out: list[str] = []
     stack: list[tuple[int, bool]] = []   # (uc_skip, ignorable)

@@ -1,11 +1,9 @@
-"""PubMed-style XML harvesting kernels (operator families S4/S5, H1-H3).
+"""PubMed-style XML harvesting kernels (operator families S4, H1-H3).
 
 Re-derived semantics (no bs4/lxml available — stdlib ``re`` implementation):
 
 - article splitter: stream-split concatenated ``<PubmedArticle>`` docs,
   grab the first ``<PMID>`` (cf. ``retrieve/pubmed/extractor/utils.py:44-81``) (S4)
-- multi ``<?xml?>`` blob splitter w/ regex repair
-  (cf. ``retrieve/pubmed/parse_abstracts.py:26-43``) (S5)
 - field harvest: abstract / articletitle / pmid / pubdate year+month /
   mesh ids+terms / pmc articleid / language; skip when any of
   abstract|title|pmid missing; drop CopyrightInformation from the abstract;
@@ -42,12 +40,6 @@ def split_pubmed_articles(blob: str) -> list[str]:
     """S4: split a concatenated stream into ``<PubmedArticle>`` chunks."""
     return re.findall(r"<PubmedArticle(?:\s[^>]*)?>.*?</PubmedArticle>",
                       blob, _FLAGS)
-
-
-def split_xml_docs(blob: str) -> list[str]:
-    """S5: split concatenated ``<?xml ...?>`` documents."""
-    parts = re.split(r"(?=<\?xml\b)", blob)
-    return [p for p in parts if p.strip()]
 
 
 def harvest_article(article_xml: str) -> dict | None:

@@ -1,8 +1,10 @@
-"""Cleaning operators: Arrow-batched pandas UDFs over text columns.
+"""Cleaning operators over text columns.
 
-Wraps the deterministic kernels (C1-C8, B1-B6, D1-D4, C5) as Series→Series
-pandas UDFs. Fixture-checked bytes always run CPython ``re`` inside these
-UDFs — never Java ``regexp_replace`` (SURVEY.md §7.4).
+Wraps the deterministic kernels for the sentence fold (C4) and
+segmentation (G1/G2) as Series→Series pandas UDFs, and mirrors the F8
+language detector as native Catalyst expressions. Fixture-checked bytes
+always run CPython ``re`` inside the UDFs — never Java ``regexp_replace``
+(SURVEY.md §7.4).
 """
 
 from __future__ import annotations
@@ -10,26 +12,13 @@ from __future__ import annotations
 import re as _re
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
-from ..kernels import entropy, pii, textclean
+from ..kernels import textclean
 from ..kernels import langid as _langid
 from ..kernels import segment as _segment
-
-
-@pandas_udf(StringType())
-def clean_line_udf(s: pd.Series) -> pd.Series:
-    """C1+C2+C3 (clean/cleaner.py:193-203 semantics)."""
-    return s.map(lambda t: textclean.clean_line(t) if t is not None else None)
-
-
-@pandas_udf(StringType())
-def clean_markdown_udf(s: pd.Series) -> pd.Series:
-    """B3 composite (scripts/clean.py:140-156 semantics)."""
-    return s.map(lambda t: textclean.clean_markdown(t) if t is not None else None)
 
 
 @pandas_udf(ArrayType(StringType()))
@@ -58,38 +47,6 @@ def chunks_udf(max_tokens: int = 256):
         return s.map(lambda t: _segment.chunk_text(t, max_tokens)
                      if t is not None else [])
     return _chunks
-
-
-@pandas_udf(StringType())
-def anonymise_udf(s: pd.Series) -> pd.Series:
-    """D1+D2 regex PII tier (anonymise/deduce.py:240-265 semantics)."""
-    return s.map(lambda t: pii.anonymise(t) if t is not None else None)
-
-
-@pandas_udf(StringType())
-def mask_numbers_udf(s: pd.Series) -> pd.Series:
-    """D4 number masking."""
-    return s.map(lambda t: pii.mask_numbers(t) if t is not None else None)
-
-
-@pandas_udf(StringType())
-def remove_repetitions_udf(s: pd.Series) -> pd.Series:
-    """C5 entropy-window repetition removal (opt-in, clean/cleaner.py:178-191)."""
-    return s.map(lambda t: entropy.remove_spurious_repetitions(t)
-                 if t is not None else None)
-
-
-@pandas_udf(StringType())
-def detect_lang_udf(s: pd.Series) -> pd.Series:
-    """F8 deterministic language id (langdetect-gate analog)."""
-    return s.map(lambda t: _langid.detect_lang(t) if t else "unknown")
-
-
-@pandas_udf(StringType())
-def prefix_dedup_key_udf(s: pd.Series) -> pd.Series:
-    """X2 prefix dedup key (scripts/clean.py:808-817 semantics)."""
-    return s.map(lambda t: textclean.prefix_dedup_key(t)
-                 if t is not None else None)
 
 
 def _sql_str(s: str) -> str:
@@ -196,13 +153,3 @@ def clean_corpus(df, id_col: str = "url", text_col: str = "text"):
     return (df.select(F.col(id_col).alias("id"),
                       F.posexplode(sentences_udf(F.col(text_col)))
                       .alias("sentence_no", "sentence")))
-
-
-def lang_gate(col: Column, keep: str = "en",
-              use_detector: bool = False) -> Column:
-    """F8 predicate. With ``use_detector`` the seeded detector result is the
-    gate (reference: ``detect_lang(text) != 'en'`` drop, scripts/clean.py:843-846);
-    otherwise trust the input ``lang`` column — a plain Catalyst filter."""
-    if use_detector:
-        return detect_lang_udf(col) == F.lit(keep)
-    return col == F.lit(keep)

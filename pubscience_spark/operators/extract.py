@@ -90,11 +90,9 @@ _EMPTY = {
 }
 
 
-def extract_one(raw: bytes, html_extended: bool = False) -> dict:
+def extract_one(raw: bytes) -> dict:
     """Single-page extraction — the sequential reference implementation used
-    for golden fixtures and inside the Arrow batch loop. ``html_extended``
-    opts the HTML route into markdownify-parity rendering (H6); default
-    output stays frozen-fixture byte-stable."""
+    for golden fixtures and inside the Arrow batch loop."""
     out = dict(_EMPTY)
     route = detect_route(raw)
     out["route"] = route
@@ -118,7 +116,7 @@ def extract_one(raw: bytes, html_extended: bool = False) -> dict:
                 abstract=r["abstract"], authors=r["authors"],
                 mesh_terms=r["mesh_terms"], language=r["language"])
         elif route == "html":
-            r = html_extract.extract_html_bytes(raw, extended=html_extended)
+            r = html_extract.extract_html_bytes(raw)
             cleaned = textclean.clean_markdown(r["extracted_text"])
             out.update(
                 extracted_text=cleaned, title=r["title"],
@@ -136,16 +134,15 @@ def extract_one(raw: bytes, html_extended: bool = False) -> dict:
     return out
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame],
-                     html_extended: bool = False) -> Iterator[pd.DataFrame]:
+def _extract_batches(batches: Iterator[pd.DataFrame]
+                     ) -> Iterator[pd.DataFrame]:
     import time
     cols = [f.name for f in EXTRACTED_SCHEMA.fields]
     for pdf_batch in batches:
         t0 = time.perf_counter()
         records = []
         for url, raw in zip(pdf_batch["url"], pdf_batch["html"]):
-            rec = extract_one(bytes(raw) if raw is not None else b"",
-                              html_extended=html_extended)
+            rec = extract_one(bytes(raw) if raw is not None else b"")
             rec["url"] = url
             records.append(rec)
         elapsed = time.perf_counter() - t0
@@ -155,11 +152,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame],
         yield pd.DataFrame(records, columns=cols)
 
 
-def extract_pages(pages: DataFrame,
-                  html_extended: bool = False) -> DataFrame:
-    """pages(url, …, html, …) → EXTRACTED_SCHEMA rows, Arrow-batched.
-    The flag is resolved driver-side into the UDF closure (worker-reuse
-    safe)."""
+def extract_pages(pages: DataFrame) -> DataFrame:
+    """pages(url, …, html, …) → EXTRACTED_SCHEMA rows, Arrow-batched."""
     return (pages.select("url", "html")
-            .mapInPandas(lambda it: _extract_batches(it, html_extended),
-                         schema=EXTRACTED_SCHEMA))
+            .mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA))

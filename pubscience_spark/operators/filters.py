@@ -1,4 +1,4 @@
-"""Filter/predicate operators (F1-F10) — native Catalyst expressions.
+"""Filter/predicate operators (F1-F4) — native Catalyst expressions.
 
 These are the cheap gates that run *before* any pUDF stage (the reference's
 cheap-filter-first idiom, ``identify/identify.py:520-554`` → SURVEY.md §4):
@@ -7,7 +7,7 @@ native predicates push down to the scan and keep whole-stage codegen intact.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from .stats import word_count_col
@@ -41,21 +41,3 @@ def include_exclude(col: str = "text", include: list[str] | None = None,
     if exclude:
         pred = pred & ~terms_any(col, exclude)
     return pred
-
-
-def drop_boilerplate_pages(df: DataFrame, col: str = "text") -> DataFrame:
-    """F6: phrase-based page drop (native contains chain — this variant is
-    not byte-contracted; the byte-exact one lives in kernels.pdfmini)."""
-    phrases = ["references", "list of figures", "list of abbreviations",
-               "all rights reserved", "copyright", "table of contents",
-               "acknowledgements", "list of publications"]
-    low = F.lower(F.col(col))
-    pred = F.lit(True)
-    for p in phrases:
-        pred = pred & ~low.contains(p)
-    return df.where(pred)
-
-
-def non_pmc(df: DataFrame, col: str = "pmc") -> DataFrame:
-    """F9: keep rows without a PMC id (build_final_dataset.py:28-33)."""
-    return df.where(F.col(col).isNull())

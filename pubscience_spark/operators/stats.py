@@ -1,4 +1,4 @@
-"""Corpus statistics operators (A1-A6) — all native Catalyst aggregations.
+"""Corpus statistics operators (A1, A2, A5) — native Catalyst aggregations.
 
 Word counting convention: ``split(trim(text), '\\s+')`` with the empty-text
 guard, matching the reference's ``len(text.split())`` for non-empty text
@@ -45,17 +45,6 @@ def vocab_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
                      F.countDistinct("word").alias("vocab_size"))
 
 
-def dup_counts(df: DataFrame, group_col: str,
-               text_col: str = "text") -> DataFrame:
-    """A3: per-group doc count vs distinct texts (scripts/clean.py:699-720)."""
-    return (df.groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.countDistinct(F.col(text_col)).alias("n_distinct_texts"))
-            .withColumn("n_duplicates",
-                        F.col("n_docs") - F.col("n_distinct_texts"))
-            .orderBy(group_col))
-
-
 def concat_by_key(df: DataFrame, key_col: str, order_col: str,
                   text_col: str, sep: str = "\n") -> DataFrame:
     """A5: order-pinned per-key text concatenation
@@ -68,19 +57,3 @@ def concat_by_key(df: DataFrame, key_col: str, order_col: str,
             .agg(F.array_join(F.transform(packed, lambda s: s["t"]), sep)
                  .alias("concat_text"))
             .orderBy(key_col))
-
-
-def group_sizes(df: DataFrame, *cols: str) -> DataFrame:
-    """A6: groupby(...).size() analog."""
-    return df.groupBy(*cols).count().orderBy(*cols)
-
-
-def observe_counters(df: DataFrame, name: str = "run_report") -> DataFrame:
-    """A4/R4: run-report counters riding the main pass via observe() —
-    zero extra jobs (analog of printed counters, scripts/clean.py:863-869)."""
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("errors"),
-        F.sum(F.when(F.length("extracted_text") == 0, 1).otherwise(0))
-        .alias("empty"))

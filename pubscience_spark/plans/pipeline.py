@@ -99,17 +99,11 @@ def committed_buckets(spark: SparkSession, lineage_path: str) -> DataFrame | Non
 def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
                    *, n_buckets: int | None = None, resume: bool = True,
                    lang_keep: str | None = None,
-                   use_detector_gate: bool = False,
-                   boilerplate_by_domain: dict[str, str] | None = None
-                   ) -> dict:
+                   use_detector_gate: bool = False) -> dict:
     """Run the pipeline; returns run metrics. Idempotent under re-run.
 
-    ``boilerplate_by_domain`` maps url hosts onto the per-source B2
-    rule-sets (``kernels/source_rules`` names, e.g. ``{"www.who.int":
-    "who"}``); matched hosts get their reference processor, others the
-    generic default — the pipeline emits ``clean_text`` + ``kept`` columns
-    alongside the raw ``extracted_text`` (dedup keys stay derived from the
-    raw text, so resume/fixture identities are unchanged).
+    ``rows_written`` counts the rows this run committed (the sum of its new
+    lineage rows), so a resume that finds every bucket committed reports 0.
     """
     extracted_path = os.path.join(out_dir, "extracted")
     lineage_path = os.path.join(out_dir, "lineage")
@@ -150,15 +144,6 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
                          .drop("__det"))
         else:
             extracted = extracted.where(F.col("language") == F.lit(lang_keep))
-
-    if boilerplate_by_domain is not None:
-        from ..operators.boilerplate import strip_boilerplate
-        extracted = extracted.withColumn(
-            "__host", F.lower(F.expr("try_parse_url(url, 'HOST')")))
-        extracted = strip_boilerplate(
-            extracted, text_col="extracted_text", source_col="__host",
-            source_map=boilerplate_by_domain,
-            title_col="title").drop("__host")
 
     # X1/X2 duplicate marking (keep-first by url — deterministic total
     # order): windows over a slim (url, keys) projection + one
@@ -205,12 +190,11 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
     # through the Hadoop FS API so s3a://hdfs:// out_dirs work (round-2
     # review: os.walk silently returns nothing for non-local paths)
     from . import fsutil
-    has_files = fsutil.has_files(spark, extracted_path)
-    if not has_files:
-        return {"rows_written": 0, "buckets": n_buckets,
-                "buckets_skipped": skipped, "write_wall_s": wall,
-                "extracted_path": extracted_path,
-                "lineage_path": lineage_path}
+    report = {"buckets": n_buckets, "buckets_skipped": skipped,
+              "write_wall_s": wall, "observed": observed,
+              "extracted_path": extracted_path, "lineage_path": lineage_path}
+    if not fsutil.has_files(spark, extracted_path):
+        return {"rows_written": 0, **report}
 
     # lineage from the *written* data: counts/checksum reflect committed rows;
     # only buckets processed this run get a lineage row (append-only log)
@@ -220,14 +204,12 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
         new_buckets = written.join(F.broadcast(committed), "bucket",
                                    "left_anti")
     # lineage is tiny (one row per bucket): cache it so the commit write and
-    # the row-count report share one scan of the written table
+    # the row-count report share one scan of the written table. Count
+    # before the write: appending to lineage_path refreshes every cached
+    # plan that reads it, so afterwards ``committed`` would hold this
+    # run's buckets too and the anti-join would count none of them
     lineage = lineage_rows(new_buckets).cache()
+    n_rows = lineage.agg(F.sum("row_count")).collect()[0][0] or 0
     lineage.write.mode("append").parquet(lineage_path)
-
-    new_rows = lineage.agg(F.sum("row_count")).collect()[0][0] or 0
     lineage.unpersist()
-    n_rows = new_rows if committed is None or not skipped else written.count()
-    return {"rows_written": n_rows, "buckets": n_buckets,
-            "buckets_skipped": skipped, "write_wall_s": wall,
-            "observed": observed,
-            "extracted_path": extracted_path, "lineage_path": lineage_path}
+    return {"rows_written": n_rows, **report}

@@ -21,7 +21,7 @@ from .operators import dedup as dedup_ops
 from .operators import filters as filter_ops
 from .operators import similarity as sim_ops
 from .operators import stats as stats_ops
-from .operators.clean import detect_lang_udf, split_sentences_udf
+from .operators.clean import split_sentences_udf
 from .operators.stats import word_count_col
 
 
@@ -130,8 +130,7 @@ def q_corpus_stats(spark, sf_dir):
     the duplicate counting (scripts/clean.py:699-720) folded in as
     ``n_distinct_texts`` / ``n_duplicates`` — one battery slot covers
     both (round-7 merge that freed the slot for ``span_dedup`` under
-    the driver's 50-entry cap; the standalone A3 entry was
-    ``dup_counts``, operator unchanged at ``operators/stats.py``).
+    the battery's 50-entry cap).
     Averages are derived from exact integer sums → bit-identical across
     engines."""
     d = _docs(spark, sf_dir).withColumn("__w", word_count_col("text"))
@@ -182,15 +181,6 @@ SELECT count(w) AS total_words, count(DISTINCT w) AS vocab_size
 FROM (SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
       FROM documents WHERE length(trim(text)) > 0)
 """
-
-
-def q_dup_counts(spark, sf_dir):
-    """A3: per-source duplicate counting (scripts/clean.py:699-720).
-    Not a battery entry since round 7 — the 50-slot cap; the A3
-    semantics ride along in ``corpus_stats`` as ``n_distinct_texts`` /
-    ``n_duplicates`` (oracle-checked there; the standalone oracle was
-    ``SELECT source, count(*), count(DISTINCT text), ... GROUP BY 1``)."""
-    return stats_ops.dup_counts(_docs(spark, sf_dir), "source")
 
 
 def q_span_dedup(spark, sf_dir):
@@ -275,15 +265,6 @@ SELECT user_id, string_agg(event_type, '|' ORDER BY ts, event_id) AS concat_type
        CAST(count(*) AS BIGINT) AS n_events
 FROM events GROUP BY user_id
 """
-
-
-def q_group_sizes(spark, sf_dir):
-    """A6: groupby-size histogram. Not a battery entry since round 4 —
-    the 50-slot cap; the A6 semantics ride along as ``n_events`` in
-    ``group_concat`` (oracle-checked there; the standalone oracle was
-    ``SELECT event_type, count(*) AS n FROM events GROUP BY 1``)."""
-    return _events(spark, sf_dir).groupBy("event_type") \
-        .agg(F.count(F.lit(1)).alias("n"))
 
 
 # --------------------------------------------------------------------------

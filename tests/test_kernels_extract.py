@@ -240,7 +240,7 @@ def test_pdf_link_harvest():
     assert pdfmini.pdf_links(b"%PDF-1.4\nno links\n%%EOF\n") == []
 
 
-def test_html_extended_markdownify_parity():
+def test_html_default_emits_no_markdown_syntax():
     html = """<html><body><article>
     <h2>Guide</h2>
     <p>See <a href="https://x.org/a">the trial</a> for <strong>strong</strong>
@@ -251,21 +251,12 @@ def test_html_extended_markdownify_parity():
 y = 2</pre>
     </article></body></html>"""
     plain = html_extract.extract_html(html)["extracted_text"]
-    ext = html_extract.extract_html(html, extended=True)["extracted_text"]
-    # default emitter unchanged: no markdown inline syntax
+    # no markdown inline syntax, quote prefixes or code fences
     assert "[the trial]" not in plain and "**" not in plain
     assert "> Quoted" not in plain and "```" not in plain
-    # extended: markdownify-parity rendering
-    assert "[the trial](https://x.org/a)" in ext
-    assert "**strong**" in ext and "*subtle*" in ext and "`code()`" in ext
-    assert "\n- top item" in ext and "\n  - nested item" in ext
-    assert "> Quoted wisdom here." in ext
-    assert "```\nx = 1\ny = 2\n```" in ext
 
 
-def test_html_extended_images_and_tables():
-    """H6 round-3 completion: ![alt](src) images and pipe tables in
-    extended mode; default mode stays image-invisible and table-free."""
+def test_html_images_invisible_and_tables_dropped():
     html = """<html><body><article>
     <p>Before <img src="/fig1.png" alt="Figure 1"> after.</p>
     <div>bare text <img src="/x.png" alt="inline pic"> continues</div>
@@ -279,38 +270,11 @@ def test_html_extended_images_and_tables():
     <img src="/logo.png" alt="">
     </article></body></html>"""
     plain = html_extract.extract_html(html)["extracted_text"]
-    ext = html_extract.extract_html(html, extended=True)["extracted_text"]
-    # default: images invisible, surrounding bare text stays ONE paragraph,
+    # images invisible, surrounding bare text stays ONE paragraph,
     # tables dropped (B5)
     assert "![" not in plain and "fig1.png" not in plain
     assert "bare text continues" in plain
     assert "aspirin" not in plain
-    # extended: markdownify-parity
-    assert "![Figure 1](/fig1.png)" in ext
-    assert "![inline pic](/x.png)" in ext
-    assert "| Drug | Dose \\| unit |" in ext
-    assert "| --- | --- |" in ext
-    assert "| aspirin | **100** mg |" in ext
-    assert "| ibuprofen | 200 mg |" in ext
-
-
-def test_html_extended_img_title_and_byte_stable_default():
-    html = ('<div><p>x <img src="a.png" alt="A" title="cap"> y</p></div>')
-    ext = html_extract.extract_html(html, extended=True)["extracted_text"]
-    assert '![A](a.png "cap")' in ext
-    # header-only or single-row tables render nothing (no body rows)
-    html2 = "<table><tr><th>only</th></tr></table><p>prose text here</p>"
-    ext2 = html_extract.extract_html(html2, extended=True)["extracted_text"]
-    assert "| only |" not in ext2 and "prose text here" in ext2
-
-
-def test_html_extended_link_density_still_gates():
-    menu = "".join(f'<li><a href="/p{i}">Page {i}</a></li>' for i in range(8))
-    html = f"<html><body><ul>{menu}</ul><p>Real prose content that is " \
-           "definitely long enough to be kept by the density gate " \
-           "because it keeps going.</p></body></html>"
-    ext = html_extract.extract_html(html, extended=True)["extracted_text"]
-    assert "Page 3" not in ext and "Real prose" in ext
 
 
 def test_html_depth_cap_preserves_text():

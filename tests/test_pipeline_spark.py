@@ -81,6 +81,7 @@ def test_pipeline_end_to_end_and_resume(spark, pages_path, tmp_path):
     # idempotent resume: everything committed → nothing reprocessed
     r2 = run_extraction(spark, pages, out, n_buckets=5)
     assert r2["buckets_skipped"] == 5
+    assert r2["rows_written"] == 0  # this run committed nothing
     lineage = spark.read.parquet(r1["lineage_path"])
     assert lineage.count() == 5  # no duplicate lineage rows
     assert lineage.groupBy("bucket").count().where("count > 1").count() == 0
@@ -105,6 +106,8 @@ def test_partial_resume_reprocesses_only_missing(spark, pages_path, tmp_path):
         spark.createDataFrame(keep).write.parquet(lineage_path)
     r2 = run_extraction(spark, pages, out, n_buckets=4)
     assert r2["buckets_skipped"] == 3
+    # only the reprocessed bucket's rows count as written by this run
+    assert r2["rows_written"] == lin[0]["row_count"]
     ext = spark.read.parquet(r1["extracted_path"])
     assert ext.count() == r1["rows_written"]
     assert ext.select("url").distinct().count() == r1["rows_written"]
@@ -160,6 +163,11 @@ def test_empty_input_is_a_noop(spark, tmp_path):
             "lang string")
     r = run_extraction(spark, empty, str(tmp_path / "out"), n_buckets=3)
     assert r["rows_written"] == 0
+    # same report keys as a run that wrote rows
+    assert set(r) == {"rows_written", "buckets", "buckets_skipped",
+                      "write_wall_s", "observed", "extracted_path",
+                      "lineage_path"}
+    assert r["observed"]["rows"] == 0
 
 
 def test_error_rows_never_fail_tasks(spark):
@@ -215,27 +223,6 @@ def test_lang_gate_detector(spark, pages_path, tmp_path):
                        lang_keep="en", use_detector_gate=True)
     ext = spark.read.parquet(r["extracted_path"])
     assert 0 < ext.count() < pages.count()
-
-
-def test_pipeline_boilerplate_by_domain(spark, tmp_path):
-    """Per-source rule-sets dispatch by url host inside the pipeline."""
-    import os
-    from pubscience_spark.datagen.pages import write_pages_parquet
-    from pubscience_spark.plans.pipeline import run_extraction
-    pp = os.path.join(str(tmp_path), "pages.parquet")
-    write_pages_parquet(pp, 120)
-    pages = spark.read.parquet(pp)
-    host = spark.sql(
-        f"SELECT lower(parse_url(url, 'HOST')) h FROM parquet.`{pp}` "
-        "LIMIT 1").collect()[0]["h"]
-    res = run_extraction(spark, pages, os.path.join(str(tmp_path), "out"),
-                         boilerplate_by_domain={host: "who"})
-    out = spark.read.parquet(res["extracted_path"])
-    assert {"clean_text", "kept", "extracted_text"} <= set(out.columns)
-    assert out.where("kept").count() > 0
-    # raw text untouched; clean_text is the processed variant
-    row = out.where(F.length("extracted_text") > 50).first()
-    assert row["clean_text"] is not None
 
 
 def test_curate_corpus_funnel(spark, tmp_path):
