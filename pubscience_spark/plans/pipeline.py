@@ -16,9 +16,12 @@ Resume anti-joins the lineage table, so re-running after a crash reprocesses
 only uncommitted buckets; dynamic partition overwrite makes that idempotent.
 
 Scale notes:
-- the shuffle key is ``pmod(xxhash64(url, SALT), n_buckets)`` — url hashing
+- the bucket id is ``pmod(xxhash64(url, SALT), n_buckets)`` and the
+  extraction shuffle hashes ``xxhash64(url, SALT)`` itself — url hashing
   defeats domain skew (Zipf hosts), the salt constant decorrelates this
-  shuffle from any earlier url-hash partitioning;
+  shuffle from any earlier url-hash partitioning. Shuffling on the bucket
+  id instead would hash the ids 0..n−1 a second time and collide them
+  (16 buckets land on 10 partitions);
 - ``n_buckets`` targets ~BYTES_PER_BUCKET of html per bucket, computed from
   a cheap (count, sum(length)) pre-agg — size-balanced partitions instead
   of file-boundary skew (the reference's per-file fan-out problem,
@@ -41,8 +44,19 @@ SALT = 0x5CA1AB1E
 BYTES_PER_BUCKET = 64 * 1024 * 1024  # ~64 MB of raw html per bucket
 
 
+def url_hash():
+    return F.xxhash64(F.col("url"), F.lit(SALT))
+
+
 def bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("url"), F.lit(SALT)), F.lit(n_buckets))
+    return F.pmod(url_hash(), F.lit(n_buckets))
+
+
+def extraction_input(pages: DataFrame, n_buckets: int) -> DataFrame:
+    """The extraction UDF's input: one size-balanced shuffle into
+    ``n_buckets`` partitions over the salted url hash. A bucket may span
+    partitions; the dedup join reshuffles before the bucketed write."""
+    return pages.repartition(n_buckets, url_hash())
 
 
 def plan_buckets(pages: DataFrame, target_bytes: int = BYTES_PER_BUCKET,
@@ -127,10 +141,8 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
                 skipped = n_committed
 
     # salted size-balanced repartition over url-hash (north rule): one
-    # shuffle that co-locates each bucket, balanced by byte-targeted count
-    pages = pages.repartition(n_buckets, "bucket")
-
-    extracted = extract_pages(pages.select("url", "html", "bucket")) \
+    # shuffle into byte-targeted partitions
+    extracted = extract_pages(extraction_input(pages, n_buckets)) \
         .withColumn("bucket", bucket_col(n_buckets))
 
     if lang_keep is not None:

@@ -265,3 +265,20 @@ def test_curate_corpus_funnel(spark, tmp_path):
                        lang_keep="en", neardup_threshold=0.8,
                        neardup_bands=64)
     assert m2 == m
+
+
+def test_extraction_input_spreads_every_partition(spark):
+    """The extraction shuffle hashes the salted url hash itself: every one
+    of the n_buckets partitions gets rows, and none gets a multiple of the
+    mean (shuffling on the bucket id re-hashes 0..n−1 and collides them:
+    16 buckets land on 10 partitions)."""
+    from pubscience_spark.plans.pipeline import bucket_col, extraction_input
+    urls = [(r["url"],) for r in generate_pages(2000, seed=7)]
+    assert len(urls) >= 2000
+    pages = spark.createDataFrame(urls, "url string") \
+        .withColumn("bucket", bucket_col(16))
+    sizes = [r["n"] for r in extraction_input(pages, 16)
+             .groupBy(F.spark_partition_id().alias("p"))
+             .agg(F.count(F.lit(1)).alias("n")).collect()]
+    assert len(sizes) == 16
+    assert max(sizes) <= 1.5 * len(urls) / 16, sorted(sizes)

@@ -33,7 +33,7 @@ def main() -> None:
     from pubscience_spark import queries as Q
     from pubscience_spark.operators import dedup as dedup_ops
     from pubscience_spark.operators.extract import extract_pages
-    from pubscience_spark.plans.pipeline import bucket_col
+    from pubscience_spark.plans.pipeline import extraction_input
     from pubscience_spark.session import get_spark
 
     spark = get_spark(shuffle_partitions=8)
@@ -45,12 +45,11 @@ def main() -> None:
     pages = spark.createDataFrame(
         [("u", bytearray(b"<html></html>"))], "url string, html binary")
     core, _ = dedup_ops.mark_duplicates_incremental(
-        extract_pages(pages.withColumn("bucket", bucket_col(8))
-                      .repartition(8, "bucket").select("url", "html")),
+        extract_pages(extraction_input(pages, 8)),
         ["sha256", "dedup_key"], "url")
     sections.append((
         "Extraction core (repartition → mapInPandas → skew-safe dedup mark)",
-        "One salted-bucket Exchange feeds ArrowEvalPython/MapInPandas; "
+        "One salted url-hash Exchange feeds ArrowEvalPython/MapInPandas; "
         "duplicate marking is HashAggregate(partial_min → min) per key = "
         "map-side combine (hot-key safe), keeper joins are SMJ over the "
         "slim (url,key) projection only, and the flags rejoin the wide "
