@@ -18,8 +18,8 @@ ITU-T specs:
 The reference reads scanned PDFs through fitz (``parse_pdfs.py:221``),
 which decodes CCITT transparently; this is the from-scratch equivalent.
 Decoding is inherently sequential bit-state per row, so the inner loop
-is plain Python over an int bit-buffer — at engine level it runs inside
-Arrow-batched UDFs (one image per call), like the JPEG/TIFF kernels.
+is plain Python over an int bit-buffer. No pipeline calls this codec;
+only its tests do.
 
 Output convention: ``decode_g4``/``decode_g3_1d`` return an (H, W)
 uint8 array with 1 = BLACK pixel (the fax-domain convention); callers

@@ -307,10 +307,10 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, out_dir: str, *,
                          .otherwise(0)), z)
         .alias("repetition_ok")).collect()[0]
     corpus_path = os.path.join(out_dir, "corpus")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     out = kept.drop("__c4_ok", "__c4_bad", "__len_ok", "__lang_ok",
                     "__q_ok", "__rep_ok")
-    out.write.mode("overwrite").partitionBy("split").parquet(corpus_path)
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("split").parquet(corpus_path)
     # dynamic overwrite writes no files for an empty result — read back
     # only when data exists (zero-input runs yield an empty manifest).
     # Hadoop FS probe: works for s3a://hdfs:// out_dirs, LocalFileSystem

@@ -55,10 +55,11 @@ def compact_extracted(spark: SparkSession, extracted_path: str,
     df = spark.read.parquet(extracted_path)
     n_buckets = df.select("bucket").distinct().count()
     writer = (df.repartition(n_buckets, "bucket")
-              .write.mode("overwrite").partitionBy("bucket"))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("bucket"))
     if max_rows_per_file:
         writer = writer.option("maxRecordsPerFile", str(max_rows_per_file))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     writer.parquet(compact_tmp)
     fsutil.touch(spark, compact_tmp + "/_COMPACTED")
     # swap order is crash-safe: move the live table ASIDE first, promote

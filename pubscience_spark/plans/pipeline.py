@@ -186,12 +186,13 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
         F.sum(F.when(F.col("is_duplicate"), 1).otherwise(0)).alias("dups"))
 
     # write data first, lineage last (commit marker). Dynamic partition
-    # overwrite keeps crashed half-written buckets idempotent.
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    # overwrite keeps crashed half-written buckets idempotent; it is set
+    # on the writer, never on the caller's session.
     import time
     t0 = time.time()
-    extracted.write.mode("overwrite").partitionBy("bucket") \
-        .parquet(extracted_path)
+    extracted.write.mode("overwrite") \
+        .option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("bucket").parquet(extracted_path)
     wall = time.time() - t0
     observed = dict(obs.get)
     new_index.write.mode("append").parquet(index_path)

@@ -45,8 +45,6 @@ def process_batch(batch_df: DataFrame, batch_id: int, extracted_path: str,
     from ..operators.extract import extract_pages
     from ..plans.pipeline import bucket_col, lineage_rows
 
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     pages = (batch_df
              .withColumn("bucket", bucket_col(n_buckets))
              .repartition(n_buckets, "bucket"))
@@ -56,11 +54,13 @@ def process_batch(batch_df: DataFrame, batch_id: int, extracted_path: str,
     extracted.persist()
     try:
         extracted.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
             .partitionBy("batch_id", "bucket").parquet(extracted_path)
         lineage = lineage_rows(extracted) \
             .withColumn("batch_id", F.lit(batch_id))
-        lineage.write.mode("overwrite").partitionBy("batch_id") \
-            .parquet(lineage_path)
+        lineage.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("batch_id").parquet(lineage_path)
     finally:
         extracted.unpersist()
 
@@ -203,7 +203,6 @@ def run_incremental_curated(spark: SparkSession, input_dir: str,
     marked, new_index = dedup_ops.mark_duplicates_incremental(
         delta, list(key_cols), "url", prior)
     curated = marked.where(~F.col("is_duplicate")).drop("is_duplicate")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     new_index.write.mode("append").parquet(index_path)
     pd_out = None
     n_paras_dropped, n_para_emptied = 0, 0
@@ -255,8 +254,9 @@ def run_incremental_curated(spark: SparkSession, input_dir: str,
                            > 0)
                           | (F.col("n_paras_dropped") == 0))
                    .drop("__pd_id", "n_paras_dropped"))
-    curated.write.mode("overwrite").partitionBy("batch_id") \
-        .parquet(curated_path)
+    curated.write.mode("overwrite") \
+        .option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("batch_id").parquet(curated_path)
     dedup_ops.unpersist_input(marked)
     if pd_out is not None:
         dedup_ops.unpersist_input(pd_out)

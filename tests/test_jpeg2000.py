@@ -1,11 +1,15 @@
-"""JPEG 2000 (ITU-T T.800) codec: round trips across the option
-matrix against the in-repo spec encoder, named-error tiers and JP2 boxes."""
+"""JPEG 2000 (ITU-T T.800) codec: MQ coder round trips and Qe-table
+invariants, round trips across the option matrix against the in-repo
+spec encoder, named-error tiers and JP2 boxes."""
+
+import random
 
 import numpy as np
 import pytest
 
 from pubscience_spark.kernels import jpeg2000 as J
-from pubscience_spark.kernels.jpeg2000 import (Jp2Error, decode_jpx,
+from pubscience_spark.kernels.jpeg2000 import (Jp2Error, MQDecoder,
+                                               MQEncoder, decode_jpx,
                                                encode_jpx)
 
 
@@ -19,6 +23,65 @@ def _img(h, w, seed=3, depth=8):
 def _rgb(h, w, seed=4):
     r = np.random.RandomState(seed)
     return r.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
+
+
+# -------------------------------------------------------------- MQ coder
+
+
+def test_qe_table_invariants():
+    """Structural checks on the transcribed T.88 Table E.1 — the same
+    catch-the-typo discipline as the CCITT Huffman tables (round 6):
+    47 states; Qe probabilities in (0, 0x5601]; all transitions in
+    range; SWITCH exactly at the three fast-attack states {0, 6, 14}
+    (which all carry Qe=0x5601); state 46 is the non-adaptive
+    absorbing state; NLPS never increases past NMPS chains' bound; Qe
+    strictly decreases along the 14..45 steady-state MPS chain."""
+    t = J.QE_TABLE
+    assert len(t) == 47
+    for qe, nmps, nlps, switch in t:
+        assert 0 < qe <= 0x5601
+        assert 0 <= nmps < 47 and 0 <= nlps < 47
+        assert switch in (0, 1)
+    assert [i for i, r in enumerate(t) if r[3]] == [0, 6, 14]
+    assert all(t[i][0] == 0x5601 for i in (0, 6, 14, 46))
+    assert t[46][1] == 46 and t[46][2] == 46
+    chain = [t[i][0] for i in range(14, 46)]
+    assert chain == sorted(chain, reverse=True)
+    # NMPS along the steady chain is i+1 until the terminal 45→45
+    assert all(t[i][1] == i + 1 for i in range(14, 45))
+    assert t[45][1] == 45
+
+
+def test_mq_roundtrip_randomized():
+    rng = random.Random(42)
+    for _ in range(40):
+        p = rng.choice([0.01, 0.1, 0.5, 0.9, 0.99])
+        n = rng.choice([1, 3, 64, 500, 3000])
+        bits = [int(rng.random() < p) for _ in range(n)]
+        enc = MQEncoder()
+        cx = bytearray(4)
+        for b in bits:
+            enc.encode(cx, 1, b)
+        data = enc.flush()
+        dec = MQDecoder(data)
+        cx2 = bytearray(4)
+        assert [dec.decode(cx2, 1) for _ in bits] == bits
+        # compression sanity: skewed streams beat 1 bit/symbol
+        if n >= 500 and p in (0.01, 0.99):
+            assert len(data) * 8 < n // 2
+
+
+def test_mq_multi_context_interleaved():
+    rng = random.Random(7)
+    seq = [(rng.randrange(8), rng.randrange(2)) for _ in range(2000)]
+    enc = MQEncoder()
+    cx = bytearray(8)
+    for label, b in seq:
+        enc.encode(cx, label, b)
+    data = enc.flush()
+    dec = MQDecoder(data)
+    cx2 = bytearray(8)
+    assert [dec.decode(cx2, lb) for lb, _ in seq] == [b for _, b in seq]
 
 
 # --------------------------------------------------------------- wavelets

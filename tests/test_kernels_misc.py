@@ -1,20 +1,6 @@
-"""Unit tests: entropy repetition removal, PII, langid, quality, hashing,
-segmentation."""
+"""Unit tests: PII, langid, quality, hashing, segmentation."""
 
-from pubscience_spark.kernels import (entropy, hashing, langid, pii, quality,
-                                      segment)
-
-
-def test_entropy_removes_repetition():
-    text = "aaaaaaaaaaaaaaaaaaaa normal words follow here"
-    out = entropy.remove_spurious_repetitions(text)
-    assert "aaaaaaaa" not in out
-    assert "words" in out
-
-
-def test_entropy_keeps_normal_text():
-    text = "The quick brown fox jumps over the lazy dog repeatedly."
-    assert entropy.remove_spurious_repetitions(text) == text
+from pubscience_spark.kernels import hashing, langid, pii, quality, segment
 
 
 def test_bsn_checksum():

@@ -113,6 +113,26 @@ def test_partial_resume_reprocesses_only_missing(spark, pages_path, tmp_path):
     assert ext.select("url").distinct().count() == r1["rows_written"]
 
 
+def test_pipelines_leave_session_overwrite_mode_alone(spark, pages_path,
+                                                     tmp_path):
+    """The batch and streaming writers ask for dynamic partition overwrite
+    on the writer itself: a caller's later static overwrite must still
+    replace its whole table."""
+    from pubscience_spark.streaming.extract_stream import process_batch
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        pages = spark.read.parquet(pages_path)
+        run_extraction(spark, pages, str(tmp_path / "batch"), n_buckets=4)
+        assert spark.conf.get(key) == "STATIC"
+        process_batch(pages, 0, str(tmp_path / "stream" / "extracted"),
+                      str(tmp_path / "stream" / "lineage"), n_buckets=4)
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_partial_resume_preserves_global_dup_flags(spark, pages_path,
                                                    tmp_path):
     """A reprocessed bucket must mark duplicates whose keeper committed in
