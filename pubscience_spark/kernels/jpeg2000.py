@@ -1,7 +1,7 @@
 """JPEG 2000 Part 1 (ISO/IEC 15444-1 / ITU-T T.800) decoder and mirror
 encoder — the PDF ``JPXDecode`` filter and the last common scanned-
 document codec missing from the media tier (VERDICT r6 #3: "JPX ... the
-most real-world-relevant residue" after CCITT/JBIG2).
+most real-world-relevant residue" among the scanned-page filters).
 
 From the PUBLIC specification only (ITU-T T.800 08/2002). The arithmetic
 entropy coder is the MQ coder of T.800 Annex C (the same coder and Qe
@@ -30,9 +30,8 @@ Named-error residue: multiple tiles, subsampled components, user
 precincts, code-block style bits (bypass/reset/termall/causal/
 predictable termination), PPM/PPT packed headers, RGN (ROI) shifts,
 unknown wavelets/progressions. The mirror encoder (spec-built test
-streams, one layer, style 0) follows the same structure as the CCITT
-encoder: it exists so round-trip tests pin the DECODER to the spec
-without any third-party codec in the container.
+streams, one layer, style 0) exists so round-trip tests pin the
+DECODER to the spec without any third-party codec installed.
 """
 from __future__ import annotations
 

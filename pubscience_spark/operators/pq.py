@@ -31,8 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (BinaryType, DoubleType, IntegerType,
-                               LongType, StringType, StructField,
-                               StructType)
+                               LongType, StructField, StructType)
 
 
 class PQCodebook:
@@ -56,10 +55,9 @@ def _adc_tables(qx: np.ndarray, cents: np.ndarray) -> np.ndarray:
     depends on the matrix shape, so building the same query's table
     inside a 5-row vs a 3-row ``qx`` matmul can differ in the last
     float32 ulp — enough to flip ``round(score, 6)`` on a boundary
-    value and break the collect-path == chunked-join-path equality the
-    tests pin. One ``(m,1,dsub)x(m,dsub,256)`` batched matmul per query
-    keeps every path bitwise-identical no matter how queries are
-    chunked."""
+    value, so a query's result would depend on which other queries
+    share its call. One ``(m,1,dsub)x(m,dsub,256)`` batched matmul per
+    query keeps its tables bitwise-identical in any query set."""
     m, n_codes, dsub = cents.shape
     ct = np.ascontiguousarray(cents.transpose(0, 2, 1))  # (m, dsub, 256)
     out = np.empty((len(qx), m, n_codes), dtype=np.float32)
@@ -198,16 +196,10 @@ def _empty_topk(spark) -> DataFrame:
 
 def _score_chunk(b_ids: np.ndarray, tables: np.ndarray,
                  codes: np.ndarray, ids: np.ndarray,
-                 k: int, m: int,
-                 mask: "np.ndarray | None" = None,
-                 add: "np.ndarray | None" = None) -> pd.DataFrame:
-    """ADC-score one query chunk against one Arrow batch of codes and
+                 k: int, m: int) -> pd.DataFrame:
+    """ADC-score the query set against one Arrow batch of codes and
     keep each query's batch-local top-(k+1) — see _adc_candidates for
-    why k+1 and why ties break on ascending id. ``mask`` (nq × nrows
-    bool) suppresses rows a query must not see (the IVF probe prune);
-    masked rows score −inf and are dropped after the prune. ``add``
-    (nq × nrows) is summed into the scores before pruning — the
-    residual-PQ ``q·c_list`` term.
+    why k+1 and why ties break on ascending id.
 
     Prune shape (round-6, replacing a per-query Python lexsort loop):
     one ``argpartition`` along axis 1 finds each row's kk-th score, a
@@ -224,10 +216,6 @@ def _score_chunk(b_ids: np.ndarray, tables: np.ndarray,
     scores = np.zeros((len(b_ids), len(ids)), dtype=np.float32)
     for j in range(m):
         scores += tables[:, j, codes[:, j]]
-    if add is not None:
-        scores = scores + add
-    if mask is not None:
-        scores = np.where(mask, scores, -np.inf)
     nq, n = scores.shape
     kk = min(k + 1, n)
     if kk < n:
@@ -236,8 +224,6 @@ def _score_chunk(b_ids: np.ndarray, tables: np.ndarray,
         cand = scores >= thresh[:, None]      # top-kk + boundary ties
     else:
         cand = np.ones_like(scores, dtype=bool)
-    if mask is not None:
-        cand &= np.isfinite(scores)           # −inf is never a result
     qi_c, col_c = np.nonzero(cand)
     keep = _local_topk_keep(qi_c, scores[qi_c, col_c], kk, ids[col_c])
     sel_q, sel_c = qi_c[keep], col_c[keep]
@@ -247,93 +233,18 @@ def _score_chunk(b_ids: np.ndarray, tables: np.ndarray,
                          .astype(np.float64)})
 
 
-def _lru_chunk_scan(codes_df: DataFrame, cols: list, bcs: list,
-                    cap: int, prep, emit) -> DataFrame:
-    """ONE ``mapInPandas`` pass over ``codes_df`` that pages the chunk
-    broadcasts in ``bcs`` through a per-worker LRU of capacity ``cap``
-    (the shared engine of :func:`pq_topk_join` /
-    :func:`ivfpq_topk_join` — the eviction and ordering subtleties live
-    in exactly one place).
-
-    - Eviction drops the Broadcast's cached value ONLY in file-backed
-      mode (``.value`` reloads from the executor-local file). With
-      ``spark.io.encryption`` the value arrives eagerly over a socket,
-      ``_path`` is unset and the object pins it regardless — deleting
-      would make the next access raise instead of freeing anything.
-    - Chunk order alternates per batch (boustrophedon): a fixed
-      ascending sweep is LRU's pathological case once cap < n_chunks
-      (100% miss every batch); alternating keeps the chunks at the
-      turn-around hot across batch boundaries.
-
-    ``prep(batch_df)`` parses the Arrow batch once; ``emit(chunk_value,
-    prep_state)`` scores one chunk against it."""
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import OrderedDict
-        live: "OrderedDict[int, tuple]" = OrderedDict()
-        warned = False
-
-        def _evict(bc) -> None:
-            # Eviction leans on PySpark Broadcast internals (_path /
-            # _value). If a PySpark upgrade renames them, say so ONCE
-            # per worker instead of silently stopping to free memory
-            # (ADVICE r5: the degraded mode must be visible); a version
-            # pin test asserts the attributes exist on the running
-            # PySpark.
-            nonlocal warned
-            if not hasattr(bc, "_path"):
-                if not warned:
-                    warned = True
-                    import warnings
-                    warnings.warn(
-                        "pq chunk-LRU: pyspark.Broadcast has no _path "
-                        "attribute on this version - chunk tables can "
-                        "no longer be evicted; live_tables_mb is NOT "
-                        "being enforced", RuntimeWarning)
-                return
-            if bc._path is not None:       # file-backed: .value reloads
-                try:
-                    del bc._value
-                except AttributeError:
-                    pass
-
-        def _load(i: int) -> tuple:
-            v = live.pop(i, None)
-            if v is None:
-                v = bcs[i].value
-                if len(live) >= cap:
-                    old, _ = live.popitem(last=False)
-                    _evict(bcs[old])
-            live[i] = v
-            return v
-
-        flip = False
-        for b in it:
-            st = prep(b)
-            order = range(len(bcs) - 1, -1, -1) if flip \
-                else range(len(bcs))
-            flip = not flip
-            for i in order:
-                yield emit(_load(i), st)
-
-    return codes_df.select(*cols).mapInPandas(_batches,
-                                              schema=_TOPK_SCHEMA)
-
-
 def _adc_candidates(codes_df: DataFrame, q_ids: np.ndarray,
                     qx: np.ndarray, codebook: PQCodebook,
-                    k: int) -> "tuple[DataFrame, object]":
-    """Batch-local ADC top-(k+1) candidates for one (bounded) query set;
-    returns ``(candidates_df, broadcast)`` so chunked callers can
-    ``destroy()`` the broadcast once the chunk is materialized.
+                    k: int) -> DataFrame:
+    """Batch-local ADC top-(k+1) candidates for one (bounded) query set.
 
     The (nq, m, 256) lookup tables ship via a Spark broadcast variable
     (torrent-distributed once per executor) rather than task-closure
     pickling, so large query batches don't bloat every task."""
     _check_dim(qx, codebook, "pq_topk")
-    cents = codebook.centroids
-    m, dsub = codebook.m, codebook.dsub
+    m = codebook.m
     # tables[q, j, code] = dot(query_sub_j, centroid_j_code)
-    tables = _adc_tables(qx, cents)               # (nq, m, 256)
+    tables = _adc_tables(qx, codebook.centroids)  # (nq, m, 256)
     bc = codes_df.sparkSession.sparkContext.broadcast((q_ids, tables))
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -349,9 +260,8 @@ def _adc_candidates(codes_df: DataFrame, q_ids: np.ndarray,
             # prune is batch-order independent (round-4 review).
             yield _score_chunk(b_ids, b_tables, codes, ids, k, m)
 
-    cands = codes_df.mapInPandas(_batches, schema=_TOPK_SCHEMA) \
+    return codes_df.mapInPandas(_batches, schema=_TOPK_SCHEMA) \
         .where(F.col("query_id") != F.col("neighbor_id"))
-    return cands, bc
 
 
 def _rank_topk(cands: DataFrame, k: int) -> DataFrame:
@@ -377,225 +287,7 @@ def pq_topk(codes_df: DataFrame, queries: DataFrame,
         return _empty_topk(codes_df.sparkSession)
     q_ids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
     qx = _unit_rows(np.array([r["qv"] for r in q_rows], dtype=np.float32))
-    cands, _bc = _adc_candidates(codes_df, q_ids, qx, codebook, k)
-    return _rank_topk(cands, k)       # _bc freed by GC after the action
-
-
-def pq_topk_join(codes_df: DataFrame, queries: DataFrame,
-                 codebook: PQCodebook, k: int = 10,
-                 chunk_size: int = 1024,
-                 live_tables_mb: float = 256,
-                 id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> DataFrame:
-    """``pq_topk`` for UNBOUNDED query sets: the query DataFrame is never
-    collected whole, and the code corpus is scanned exactly ONCE no
-    matter how many queries there are (the round-4 version ran one full
-    corpus pass per 1024-query chunk — at 10^12 codes and 10^6 queries
-    those ~1000 rescans dominate everything).
-
-    Shape: queries are hash-chunked (xxhash64 — deterministic under any
-    partitioning; the chunked frame is persisted so chunk membership is
-    computed once and cannot drift between the per-chunk collects), each
-    chunk's (nq × m × 256) ADC tables are torrent-broadcast, and a
-    SINGLE ``mapInPandas`` pass over the codes pages the chunk tables
-    through an LRU: per Arrow batch it loads one chunk's tables, scores
-    the batch, emits the batch-local top-(k+1) rows for that chunk's
-    queries, and moves on. Live table memory per worker is bounded by
-    ``live_tables_mb`` (evicted chunks drop their deserialized value;
-    a later batch reloads from the executor-local broadcast file —
-    ~8 MB of local disk read vs a full remote corpus rescan). The
-    candidate pass is materialized (eager ``localCheckpoint``) and every
-    broadcast destroyed before the ranking window runs. Results are
-    identical to :func:`pq_topk` — the per-batch prune is per-query, so
-    chunking cannot change which candidates survive."""
-    from pyspark import StorageLevel
-    spark = codes_df.sparkSession
-    sc = spark.sparkContext
-    bcs = []
-    try:
-        slim = (queries.select(F.col(id_col).cast("long").alias("qid"),
-                               F.col(vec_col).alias("qv"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        try:
-            n_q = slim.count()
-            if not n_q:
-                return _empty_topk(spark)
-            n_chunks = max(1, -(-n_q // chunk_size))
-            chunked = slim.withColumn(
-                "chunk", F.pmod(F.xxhash64(F.col("qid")),
-                                F.lit(n_chunks)))
-            m, dsub = codebook.m, codebook.dsub
-            cents = codebook.centroids
-            for c in range(n_chunks):
-                q_rows = chunked.where(F.col("chunk") == c) \
-                    .select("qid", "qv").collect()
-                if not q_rows:
-                    continue
-                q_ids = np.array([r["qid"] for r in q_rows],
-                                 dtype=np.int64)
-                qx = _unit_rows(np.array([r["qv"] for r in q_rows],
-                                         dtype=np.float32))
-                _check_dim(qx, codebook, "pq_topk_join")
-                tables = _adc_tables(qx, cents)   # (nq_chunk, m, 256)
-                bcs.append(sc.broadcast((q_ids, tables)))
-        finally:
-            slim.unpersist()
-
-        table_bytes = max(1, chunk_size * m * 256 * 4)
-        cap = max(1, int(live_tables_mb * (1 << 20)) // table_bytes)
-
-        def _prep(b: pd.DataFrame) -> tuple:
-            codes = np.stack(
-                b["codes"].map(lambda c: np.frombuffer(c,
-                                                       dtype=np.uint8)))
-            return codes, b["id"].to_numpy()
-
-        def _emit(v: tuple, st: tuple) -> pd.DataFrame:
-            b_ids, b_tables = v
-            codes, ids = st
-            return _score_chunk(b_ids, b_tables, codes, ids, k, m)
-
-        cands = (_lru_chunk_scan(codes_df, [F.col("id"), F.col("codes")],
-                                 bcs, cap, _prep, _emit)
-                 .where(F.col("query_id") != F.col("neighbor_id"))
-                 .localCheckpoint(eager=True))    # ONE corpus scan, here
-    except BaseException:
-        for bc in bcs:                            # no torrent-blob leak
-            try:                                  # on a failed chunk
-                bc.destroy()                      # build or scan
-            except Exception:
-                pass
-        raise
-    for bc in bcs:
-        bc.destroy()
-    return _rank_topk(cands, k)
-
-
-def ivfpq_topk_join(corpus: DataFrame, queries: DataFrame, *,
-                    k: int = 10, n_lists: int = 16, n_probe: int = 4,
-                    m: int = 8, residual: bool = False,
-                    n_train: int = 20_000,
-                    pq_iter: int = 10, kmeans_iter: int = 5,
-                    chunk_size: int = 1024,
-                    live_tables_mb: float = 256,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """:func:`ivfpq_topk` for UNBOUNDED query sets: queries are never
-    collected whole, and the coded corpus is scanned exactly ONCE.
-
-    Same chunked-broadcast scheme as :func:`pq_topk_join`, with the IVF
-    prune carried INSIDE the scan: each chunk's broadcast holds the ADC
-    tables plus an (nq_chunk × n_lists) boolean probe matrix, and per
-    Arrow batch the scores of rows whose ``list_id`` a query did not
-    probe are masked to −inf before the batch-local top-(k+1) prune —
-    semantically identical to the probe equi-join, without a per-chunk
-    corpus pass.
-
-    ``residual=True`` (the faiss-default recipe — round 6) quantizes
-    ``v − coarse_centroid``; the chunk broadcast then also carries the
-    (nq_chunk × n_lists) ``q·c_list`` matrix (already computed for the
-    probe selection) and it is added per candidate row inside the scan
-    — scores match :func:`ivfpq_topk(residual=True)` exactly
-    (test-pinned at probe-all AND pruned settings)."""
-    from pyspark import StorageLevel
-
-    from .similarity import kmeans_centroids
-    spark = corpus.sparkSession
-    sc = spark.sparkContext
-    cents = kmeans_centroids(corpus, n_lists, n_iter=kmeans_iter,
-                             id_col=id_col, vec_col=vec_col)
-    cmat = _unit_rows(np.array(cents, dtype=np.float32))
-    if residual:
-        codebook = _train_pq_residual(corpus, cmat, m, n_train,
-                                      pq_iter, id_col, vec_col)
-        coded = _encode_residual(corpus, codebook, cmat, id_col,
-                                 vec_col)     # list_id rides the pass
-    else:
-        dim = len(corpus.select(vec_col).first()[0])
-        codebook = train_pq(corpus, dim=dim, m=m, n_train=n_train,
-                            n_iter=pq_iter, id_col=id_col,
-                            vec_col=vec_col)
-        coded = encode_pq(corpus, codebook, id_col, vec_col)
-        slim_corpus = corpus.select(F.col(id_col), F.col(vec_col))
-        if n_lists > 64:
-            from .similarity import ivf_assign_join
-            assigned = ivf_assign_join(slim_corpus, cents, vec_col,
-                                       id_col)
-        else:
-            from .similarity import ivf_assign
-            assigned = ivf_assign(slim_corpus, cents, vec_col)
-        coded = coded.join(
-            assigned.select(F.col(id_col).cast("long").alias("id"),
-                            "list_id"), "id")
-
-    mm, dsub = codebook.m, codebook.dsub
-    bcs = []
-    try:
-        slim = (queries.select(F.col(id_col).cast("long").alias("qid"),
-                               F.col(vec_col).alias("qv"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        try:
-            n_q = slim.count()
-            if not n_q:
-                return _empty_topk(spark)
-            n_chunks = max(1, -(-n_q // chunk_size))
-            chunked = slim.withColumn(
-                "chunk", F.pmod(F.xxhash64(F.col("qid")),
-                                F.lit(n_chunks)))
-            for c in range(n_chunks):
-                q_rows = chunked.where(F.col("chunk") == c) \
-                    .select("qid", "qv").collect()
-                if not q_rows:
-                    continue
-                q_ids = np.array([r["qid"] for r in q_rows],
-                                 dtype=np.int64)
-                qx = _unit_rows(np.array([r["qv"] for r in q_rows],
-                                         dtype=np.float32))
-                _check_dim(qx, codebook, "ivfpq_topk_join")
-                tables = _adc_tables(qx, codebook.centroids)
-                qdotc = _rows_dot(qx, cmat.T)     # (nq_chunk, n_lists)
-                probe = np.zeros_like(qdotc, dtype=bool)
-                top = np.argsort(-qdotc, axis=1)[:, :n_probe]
-                probe[np.arange(len(q_ids))[:, None], top] = True
-                bcs.append(sc.broadcast(
-                    (q_ids, tables, probe,
-                     qdotc if residual else None)))
-        finally:
-            slim.unpersist()
-
-        table_bytes = max(1, chunk_size * (mm * 256 * 4 + n_lists))
-        cap = max(1, int(live_tables_mb * (1 << 20)) // table_bytes)
-
-        def _prep(b: pd.DataFrame) -> tuple:
-            codes = np.stack(
-                b["codes"].map(lambda c: np.frombuffer(c,
-                                                       dtype=np.uint8)))
-            return codes, b["id"].to_numpy(), b["list_id"].to_numpy()
-
-        def _emit(v: tuple, st: tuple) -> pd.DataFrame:
-            b_ids, b_tables, b_probe, b_qdotc = v
-            codes, ids, lists = st
-            return _score_chunk(
-                b_ids, b_tables, codes, ids, k, mm,
-                mask=b_probe[:, lists],
-                add=None if b_qdotc is None else b_qdotc[:, lists])
-
-        cands = (_lru_chunk_scan(
-                     coded,
-                     [F.col("id"), F.col("list_id"), F.col("codes")],
-                     bcs, cap, _prep, _emit)
-                 .where(F.col("query_id") != F.col("neighbor_id"))
-                 .localCheckpoint(eager=True))    # ONE corpus scan
-    except BaseException:
-        for bc in bcs:
-            try:
-                bc.destroy()
-            except Exception:
-                pass
-        raise
-    for bc in bcs:
-        bc.destroy()
-    return _rank_topk(cands, k)
+    return _rank_topk(_adc_candidates(codes_df, q_ids, qx, codebook, k), k)
 
 
 def _train_pq_residual(corpus: DataFrame, cmat: np.ndarray, m: int,

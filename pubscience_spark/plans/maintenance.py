@@ -25,13 +25,6 @@ from pyspark.sql import SparkSession
 from . import fsutil
 
 
-def count_files(path: str, spark: SparkSession | None = None) -> int:
-    if spark is None:
-        from pyspark.sql import SparkSession as _S
-        spark = _S.getActiveSession()
-    return fsutil.count_files(spark, path)
-
-
 def compact_extracted(spark: SparkSession, extracted_path: str,
                       *, max_rows_per_file: int | None = None) -> dict:
     """Rewrite the bucket-partitioned extracted table with one writer task

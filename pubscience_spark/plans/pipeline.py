@@ -157,6 +157,14 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
         else:
             extracted = extracted.where(F.col("language") == F.lit(lang_keep))
 
+    # cross-run correctness: keepers committed by earlier runs win, so
+    # a resumed bucket still marks duplicates of rows it cannot see.
+    # Loaded before the persist below, so a failing load leaves nothing
+    # cached in the caller's session
+    index_path = os.path.join(out_dir, "dedup_index")
+    prior_index = dedup_ops.load_keeper_index(spark, index_path) \
+        if resume else None
+
     # X1/X2 duplicate marking (keep-first by url — deterministic total
     # order): windows over a slim (url, keys) projection + one
     # shuffle-hash join back — wide rows shuffle once; requires a
@@ -164,39 +172,38 @@ def run_extraction(spark: SparkSession, pages: DataFrame, out_dir: str,
     # (otherwise the expensive mapInPandas extraction runs twice)
     from pyspark.storagelevel import StorageLevel
     cached = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-    index_path = os.path.join(out_dir, "dedup_index")
-    # cross-run correctness: keepers committed by earlier runs win, so
-    # a resumed bucket still marks duplicates of rows it cannot see
-    prior_index = dedup_ops.load_keeper_index(spark, index_path) \
-        if resume else None
-    extracted, new_index = dedup_ops.mark_duplicates_incremental(
-        cached, ["sha256", "dedup_key"], "url", prior_index)
+    try:
+        extracted, new_index = dedup_ops.mark_duplicates_incremental(
+            cached, ["sha256", "dedup_key"], "url", prior_index)
 
-    # run-report counters (A4/R4) ride the write pass via observe() —
-    # zero extra jobs (scripts/clean.py:863-869 analog)
-    from pyspark.sql import Observation
-    obs = Observation("run_report")
-    extracted = extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
-        .alias("errors"),
-        F.sum(F.when(F.length("extracted_text") == 0, 1).otherwise(0))
-        .alias("empty"),
-        F.sum(F.when(F.col("is_duplicate"), 1).otherwise(0)).alias("dups"))
+        # run-report counters (A4/R4) ride the write pass via observe() —
+        # zero extra jobs (scripts/clean.py:863-869 analog)
+        from pyspark.sql import Observation
+        obs = Observation("run_report")
+        extracted = extracted.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
+            .alias("errors"),
+            F.sum(F.when(F.length("extracted_text") == 0, 1).otherwise(0))
+            .alias("empty"),
+            F.sum(F.when(F.col("is_duplicate"), 1).otherwise(0))
+            .alias("dups"))
 
-    # write data first, lineage last (commit marker). Dynamic partition
-    # overwrite keeps crashed half-written buckets idempotent; it is set
-    # on the writer, never on the caller's session.
-    import time
-    t0 = time.time()
-    extracted.write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("bucket").parquet(extracted_path)
-    wall = time.time() - t0
-    observed = dict(obs.get)
-    new_index.write.mode("append").parquet(index_path)
-    cached.unpersist()
+        # write data first, lineage last (commit marker). Dynamic
+        # partition overwrite keeps crashed half-written buckets
+        # idempotent; it is set on the writer, never on the caller's
+        # session.
+        import time
+        t0 = time.time()
+        extracted.write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("bucket").parquet(extracted_path)
+        wall = time.time() - t0
+        observed = dict(obs.get)
+        new_index.write.mode("append").parquet(index_path)
+    finally:
+        cached.unpersist()
 
     # empty run (everything committed already, or empty input): dynamic
     # overwrite writes no files, so there may be nothing to read. Probe

@@ -30,7 +30,7 @@ def _rgb(h, w, seed=4):
 
 def test_qe_table_invariants():
     """Structural checks on the transcribed T.88 Table E.1 — the same
-    catch-the-typo discipline as the CCITT Huffman tables (round 6):
+    catch-the-typo discipline as any transcribed spec table:
     47 states; Qe probabilities in (0, 0x5601]; all transitions in
     range; SWITCH exactly at the three fast-attack states {0, 6, 14}
     (which all carry Qe=0x5601); state 46 is the non-adaptive

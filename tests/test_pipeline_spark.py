@@ -190,6 +190,22 @@ def test_empty_input_is_a_noop(spark, tmp_path):
     assert r["observed"]["rows"] == 0
 
 
+def test_failed_run_leaves_nothing_cached(spark, pages_path, tmp_path):
+    """A run that raises must not leave its persisted extracted frame in
+    the caller's session: here the prior dedup index is corrupt, so the
+    resume's index load fails."""
+    index_dir = tmp_path / "out" / "dedup_index"
+    index_dir.mkdir(parents=True)
+    (index_dir / "part-00000.parquet").write_bytes(b"not a parquet file")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+    with pytest.raises(Exception, match="not a Parquet file"):
+        run_extraction(spark, spark.read.parquet(pages_path),
+                       str(tmp_path / "out"), n_buckets=3, resume=True)
+    assert cache.isEmpty()
+
+
 def test_error_rows_never_fail_tasks(spark):
     rows = [("u1", None), ("u2", b"\x00\xffgarbage"),
             ("u3", b"%PDF-1.4 broken"), ("u4", b"<?xml version=\"1.0\"?><bad")]

@@ -220,52 +220,6 @@ def test_ivfpq_batch_prune_preserves_results(spark):
     assert max(counts) == 6                       # full k survives prune
 
 
-def test_pq_topk_join_matches_collect_path(spark):
-    """Join-shaped (chunked, broadcast-table) query path is result-
-    identical to the collect-based pq_topk — multiple chunks forced."""
-    emb = _emb(spark, 200)
-    dim = len(emb.select("embedding").first()[0])
-    cb = PQ.train_pq(emb, dim=dim, m=8, n_train=200, n_iter=4)
-    codes = PQ.encode_pq(emb, cb)
-    q = emb.where(F.col("vec_id") < 11)           # 11 queries, 4 chunks
-    a = sorted(map(tuple, PQ.pq_topk(codes, q, cb, k=5).collect()))
-    b = sorted(map(tuple, PQ.pq_topk_join(codes, q, cb, k=5,
-                                          chunk_size=3).collect()))
-    assert a == b and len(a) == 11 * 5
-    # a live-table budget far below one chunk forces LRU eviction and
-    # broadcast-value reloads mid-scan — results must not change
-    c = sorted(map(tuple, PQ.pq_topk_join(
-        codes, q, cb, k=5, chunk_size=3,
-        live_tables_mb=1e-6).collect()))
-    assert a == c
-    # empty query set
-    assert PQ.pq_topk_join(codes, emb.where(F.col("vec_id") < 0),
-                           cb, k=3).count() == 0
-
-
-def test_pq_topk_join_scans_corpus_once(spark):
-    """The whole point of the join path at 10^12 codes: ONE pass over
-    the code corpus regardless of chunk count (the round-4 version ran
-    one pass per chunk). Counted via an accumulator that ticks once per
-    scan task."""
-    emb = _emb(spark, 200)
-    dim = len(emb.select("embedding").first()[0])
-    cb = PQ.train_pq(emb, dim=dim, m=8, n_train=200, n_iter=4)
-    codes = PQ.encode_pq(emb, cb).localCheckpoint(eager=True)
-    acc = spark.sparkContext.accumulator(0)
-
-    def _counting(it):
-        acc.add(1)                                # once per scan task
-        for b in it:
-            yield b
-
-    counted = codes.mapInPandas(_counting, schema=codes.schema)
-    q = emb.where(F.col("vec_id") < 11)           # 4 chunks at size 3
-    out = PQ.pq_topk_join(counted, q, cb, k=5, chunk_size=3).collect()
-    assert len(out) == 11 * 5
-    assert acc.value == codes.rdd.getNumPartitions()
-
-
 def test_pq_dim_mismatch_raises_clearly(spark):
     """ADVICE r3: a codebook applied to wrong-dim vectors must fail with
     a named ValueError, not a silent truncation or numpy shape error."""
@@ -319,77 +273,3 @@ def test_pq_prune_deterministic_under_ties(spark):
                               n_lists=4, n_probe=4, kmeans_iter=1)
                 .orderBy("rank").collect()]
         assert got2 == [1, 2, 3, 4, 5], (parts, got2)
-
-
-def test_ivfpq_topk_join_matches_collect_path(spark):
-    """Unbounded-query IVF-PQ: probe-mask-inside-the-scan equals the
-    probe-equi-join collect path, at probe-all AND pruned settings,
-    across multiple chunks with forced LRU eviction."""
-    emb = _emb(spark, 200)
-    q = emb.where(F.col("vec_id") < 11)           # 4 chunks at size 3
-    # pruned setting (n_probe < n_lists) exercises the distinctive
-    # probe-mask path; the mask-allows-all case is the degenerate subset
-    a = sorted(map(tuple, PQ.ivfpq_topk(
-        emb, q, k=5, n_lists=4, n_probe=2, kmeans_iter=2).collect()))
-    b = sorted(map(tuple, PQ.ivfpq_topk_join(
-        emb, q, k=5, n_lists=4, n_probe=2, kmeans_iter=2,
-        chunk_size=3, live_tables_mb=1e-6).collect()))
-    assert a == b
-    # empty query set
-    assert PQ.ivfpq_topk_join(emb, emb.where(F.col("vec_id") < 0),
-                              k=3, n_lists=4, kmeans_iter=1).count() == 0
-
-
-def test_ivfpq_topk_join_residual_matches_collect_path(spark):
-    """Round 6: residual mode in the unbounded-query join — the
-    q·c_list term rides the chunk broadcast and is added inside the
-    scan; results must equal ivfpq_topk(residual=True) at probe-all AND
-    pruned settings, with forced LRU eviction, and the corpus must
-    still be scanned exactly once."""
-    emb = _emb(spark, 200)
-    q = emb.where(F.col("vec_id") < 11)           # 4 chunks at size 3
-    for n_probe in (4, 2):                        # probe-all, pruned
-        a = sorted(map(tuple, PQ.ivfpq_topk(
-            emb, q, k=5, n_lists=4, n_probe=n_probe, residual=True,
-            kmeans_iter=2).collect()))
-        b = sorted(map(tuple, PQ.ivfpq_topk_join(
-            emb, q, k=5, n_lists=4, n_probe=n_probe, residual=True,
-            kmeans_iter=2, chunk_size=3,
-            live_tables_mb=1e-6).collect()))
-        assert a == b, n_probe
-    # the single-scan contract survives residual mode: the coded frame
-    # is built from the corpus in ONE mapInPandas pass, counted at the
-    # raw-corpus scan level via an accumulator
-    acc = spark.sparkContext.accumulator(0)
-
-    def _counting(it):
-        acc.add(1)
-        for b in it:
-            yield b
-
-    counted = emb.localCheckpoint(eager=True)
-    n_parts = counted.rdd.getNumPartitions()
-    counted = counted.mapInPandas(_counting, schema=counted.schema)
-    out = PQ.ivfpq_topk_join(counted, q, k=5, n_lists=4, n_probe=4,
-                             residual=True, kmeans_iter=1,
-                             chunk_size=3).collect()
-    assert len(out) > 0
-    # corpus feeds kmeans sample + residual-train sample + the coded
-    # scan — bounded passes (≤ a small constant × partitions), never
-    # one pass per query chunk (4 chunks here would add 4×)
-    assert acc.value <= 4 * n_parts
-
-
-def test_broadcast_private_internals_pin():
-    """ADVICE r5: the chunk-LRU eviction relies on pyspark Broadcast's
-    _path/_value internals. Pin them: if a PySpark upgrade renames
-    them, this fails loudly instead of eviction silently degrading
-    (the runtime path additionally warns once per worker)."""
-    import inspect
-
-    from pyspark.broadcast import Broadcast
-    src = inspect.getsource(Broadcast)
-    assert "_path" in src and "_value" in src
-    # the file-backed constructor branch sets _path; the value property
-    # caches into _value — both named in the class body today
-    assert "def value" in src
